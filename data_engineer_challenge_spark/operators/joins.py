@@ -22,33 +22,22 @@ def lookup_join(
     how: str = "inner",
     broadcast_dim: bool = True,
     dedup_dim: bool = True,
-    dedup_order: Sequence[str] | None = None,
 ) -> DataFrame:
     """Replace N point-lookups with one hash join.
 
     ``dedup_dim`` mirrors the reference's ``fetchone`` (exo_2.py:217):
     only one dimension row per key may survive or the join fans out.
-    Pass ``dedup_order`` to make the survivor DETERMINISTIC (lowest by
-    the given columns); without it ``dropDuplicates`` keeps whichever
-    row survives the shuffle — acceptable only when the caller knows
-    the dim is already unique per key. ``broadcast_dim`` is right
-    whenever the dim fits in executor memory (ipphist ≈ 4.8 k rows
-    always does); at 100 TB a huge dim falls back to sort-merge by
-    passing False.
+    ``dropDuplicates`` keeps whichever row survives the shuffle —
+    acceptable only when the caller knows the dim is already unique
+    per key; a deterministic survivor is an aggregate (the document
+    pipeline's lowest ``PATIENT_NUM`` per IPP). ``broadcast_dim`` is
+    right whenever the dim fits in executor memory (ipphist ≈ 4.8 k
+    rows always does); at 100 TB a huge dim falls back to sort-merge
+    by passing False.
     """
-    from pyspark.sql.window import Window
-
     keys = [on] if isinstance(on, str) else list(on)
     if dedup_dim:
-        if dedup_order:
-            w = Window.partitionBy(*keys).orderBy(*dedup_order)
-            dim = (
-                dim.withColumn("__lk_rn", F.row_number().over(w))
-                .filter(F.col("__lk_rn") == 1)
-                .drop("__lk_rn")
-            )
-        else:
-            dim = dim.dropDuplicates(keys)
+        dim = dim.dropDuplicates(keys)
     if broadcast_dim:
         dim = F.broadcast(dim)
     return facts.join(dim, on=keys, how=how)

@@ -199,15 +199,13 @@ class ParquetWarehouse:
         its layout, so it raises. Unpartitioned tables use the full
         staged rewrite. A source with duplicate keys raises (real
         MERGE INTO semantics) instead of silently breaking the
-        table's key invariant."""
+        table's key invariant.
+
+        On both paths the source plan runs once: it is cached, the
+        duplicate-key guard's action fills the cache and the write
+        reads it back (tested with a row-counting UDF)."""
         self._recover_swap(table)
         meta = self._meta(table) if self.exists(table) else None
-        if meta is None:
-            # the pruned path runs the check on its cached source
-            self._check_unique_source(source, keys, table)
-        if not self.exists(table):
-            self._stage_and_swap(table, source)
-            return
         if meta is not None:
             if list(keys) != meta["partition_keys"]:
                 raise ValueError(
@@ -220,10 +218,20 @@ class ParquetWarehouse:
                 )
             self._merge_pruned(table, source, keys, meta["n_buckets"])
             return
-        target = self.read(table)
-        kept = target.join(source.select(*keys), on=list(keys), how="left_anti")
-        merged = kept.unionByName(source)
-        self._stage_and_swap(table, merged)
+        # the guard's action fills the cache and the write reads it:
+        # the source plan runs once, and the rows written are the rows
+        # checked even when the source is non-deterministic
+        src = source.cache()
+        try:
+            self._check_unique_source(src, keys, table)
+            if not self.exists(table):
+                self._stage_and_swap(table, src)
+                return
+            target = self.read(table)
+            kept = target.join(src.select(*keys), on=list(keys), how="left_anti")
+            self._stage_and_swap(table, kept.unionByName(src))
+        finally:
+            src.unpersist()
 
     def _merge_pruned(
         self, table: str, source: DataFrame, keys: Sequence[str], n_buckets: int

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .functions import (
     death_code,
@@ -29,9 +30,9 @@ from .functions import (
     master_patient_flag,
     parse_fr_date,
 )
+from .localrel import local_rows_df
 from .operators.dedup import keep_first_dedup
 from .operators.ids import dense_ids, extend_ids
-from .operators.joins import anti_join, lookup_join
 from .operators.merge import ParquetWarehouse
 from .schemas import DWH_DOCUMENT, DWH_PATIENT, DWH_PATIENT_IPPHIST
 
@@ -96,14 +97,16 @@ def _project_patient_tables(
     return patient, ipphist
 
 
-def shape_documents(
-    files: DataFrame, ipphist: DataFrame, upload_id: int, start_doc_num: int = 0
-) -> tuple[DataFrame, DataFrame]:
-    """(filename, text) rows → (DWH_DOCUMENT rows, rejects).
+def resolve_patients(files: DataFrame, ipphist: DataFrame) -> DataFrame:
+    """(filename, text) rows → readable documents with their parsed
+    keys and ``PATIENT_NUM``, null when the IPP matches no patient.
 
-    Rejects = readable documents whose IPP matches no patient — the
-    reference logs a warning and drops them (exo_2.py:255-258); here
-    they come back as a DataFrame branch for a quarantine sink.
+    One broadcast left join against the lowest ``PATIENT_NUM`` per IPP:
+    if an IPP ever maps to two patients the lowest wins
+    DETERMINISTICALLY (an arbitrary survivor would re-resolve the same
+    document to a different patient across runs and break stable
+    numbering). Matched documents and rejects are both filters of this
+    one result, so a caller that caches it resolves each document once.
     """
     parsed = (
         files.filter(F.col("text").isNotNull() & (F.col("text") != ""))  # P10
@@ -111,19 +114,24 @@ def shape_documents(
         .withColumn("ID_DOC_SOURCE", filename_doc_id("filename"))
         .withColumn("DOCUMENT_TYPE", filename_extension("filename"))
     )
-    lookup = ipphist.select("HOSPITAL_PATIENT_ID", "PATIENT_NUM")
-    # dedup_order: if an IPP ever maps to two PATIENT_NUMs the lowest
-    # wins DETERMINISTICALLY — dropDuplicates would pick whichever row
-    # survives the shuffle, re-resolving the same document to a
-    # different patient across runs and breaking stable numbering
-    matched = lookup_join(
-        parsed,
-        lookup,
-        on="HOSPITAL_PATIENT_ID",
-        how="inner",
-        dedup_order=["PATIENT_NUM"],
+    lowest = ipphist.groupBy("HOSPITAL_PATIENT_ID").agg(
+        F.min("PATIENT_NUM").alias("PATIENT_NUM")
     )
-    rejects = anti_join(parsed, lookup, on="HOSPITAL_PATIENT_ID").select(
+    return parsed.join(F.broadcast(lowest), "HOSPITAL_PATIENT_ID", "left")
+
+
+def shape_documents(
+    resolved: DataFrame, upload_id: int, start_doc_num: int = 0
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`resolve_patients` rows → (DWH_DOCUMENT rows, rejects).
+
+    Rejects = readable documents whose IPP matches no patient (a null
+    ``PATIENT_NUM``) — the reference logs a warning and drops them
+    (exo_2.py:255-258); here they come back as (filename,
+    HOSPITAL_PATIENT_ID) rows for a quarantine sink.
+    """
+    matched = resolved.filter(F.col("PATIENT_NUM").isNotNull())
+    rejects = resolved.filter(F.col("PATIENT_NUM").isNull()).select(
         "filename", "HOSPITAL_PATIENT_ID"
     )
 
@@ -232,31 +240,45 @@ def run_document_batch(
     wh: ParquetWarehouse, files: DataFrame, upload_id: int
 ) -> DataFrame:
     """Entry point 2 (exo_2.py:311-339): extract, resolve patients,
-    number stably, MERGE on the business key. Returns the rejects.
+    number stably, MERGE on the business key. Returns the rejects as a
+    driver-local frame.
 
     Stable numbering: rows whose (PATIENT_NUM, ID_DOC_SOURCE) already
     exist keep their DOCUMENT_NUM; genuinely new rows continue the
     sequence from the current max.
+
+    The resolved documents are cached: the MERGE's guard extracts and
+    resolves them once, and its write and the rejects read the cache.
     """
     ipphist = wh.read("DWH_PATIENT_IPPHIST", DWH_PATIENT_IPPHIST)
-    docs, rejects = shape_documents(files, ipphist, upload_id)
-
-    bk = ["PATIENT_NUM", "ID_DOC_SOURCE"]
-    if wh.exists("DWH_DOCUMENT"):
-        existing = wh.read("DWH_DOCUMENT", DWH_DOCUMENT)
-        start = existing.agg(F.max("DOCUMENT_NUM")).first()[0] or 0
-        known = existing.select(*bk, F.col("DOCUMENT_NUM").alias("__keep_num"))
-        src = docs.drop("DOCUMENT_NUM")
-        # no broadcast hint: known grows with the warehouse (every
-        # document ever loaded) — let AQE pick broadcast while it is
-        # small and fall back to a shuffle join when it is not
-        kept = (
-            src.join(known, bk, "inner")
-            .withColumnRenamed("__keep_num", "DOCUMENT_NUM")
-        )
-        fresh = extend_ids(
-            anti_join(src, known, bk), "DOCUMENT_NUM", start, bk
-        )
-        docs = kept.unionByName(fresh).select(*[f.name for f in DWH_DOCUMENT.fields])
-    wh.merge_upsert("DWH_DOCUMENT", docs, bk)
-    return rejects
+    resolved = resolve_patients(files, ipphist).cache()
+    try:
+        docs, rejects = shape_documents(resolved, upload_id)
+        bk = ["PATIENT_NUM", "ID_DOC_SOURCE"]
+        if wh.exists("DWH_DOCUMENT"):
+            existing = wh.read("DWH_DOCUMENT", DWH_DOCUMENT)
+            start = existing.agg(F.max("DOCUMENT_NUM")).first()[0] or 0
+            known = existing.select(*bk, F.col("DOCUMENT_NUM").alias("__keep_num"))
+            # one left join, so the batch is planned (and read from the
+            # cache) once: known keys keep their number, and the fresh
+            # rows, ordered first, number on from the max in key order.
+            # No broadcast hint: known grows with the warehouse (every
+            # document ever loaded) — let AQE pick broadcast while it is
+            # small and fall back to a shuffle join when it is not
+            fresh_first = Window.orderBy(F.col("__keep_num").isNotNull(), *bk)
+            docs = (
+                docs.drop("DOCUMENT_NUM")
+                .join(known, bk, "left")
+                .withColumn(
+                    "DOCUMENT_NUM",
+                    F.coalesce(
+                        "__keep_num", F.row_number().over(fresh_first) + F.lit(start)
+                    ).cast("long"),
+                )
+                .select(*[f.name for f in DWH_DOCUMENT.fields])
+            )
+        wh.merge_upsert("DWH_DOCUMENT", docs, bk)
+        rejected = [tuple(r) for r in rejects.collect()]
+    finally:
+        resolved.unpersist()
+    return local_rows_df(wh.spark, rejected, "filename string, HOSPITAL_PATIENT_ID string")

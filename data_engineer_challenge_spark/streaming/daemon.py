@@ -10,9 +10,14 @@ separate counters incremented per *fired* pipeline (T5).
 Parity note (SURVEY §2.7 T4): like the reference, a document trigger
 reprocesses the whole directory — the MERGE is idempotent so this is
 correct; ``changed_only=True`` switches to incremental processing of
-just the new/modified files (the optimization the reference never
-built). Deletions are detected and reported but never delete warehouse
-rows (the reference's upsert cannot delete either).
+just the diff's new and modified files (the optimization the reference
+never built), so a tick reads and extracts O(change) files, not every
+file ever dropped. Either way the files come from the snapshot the
+trigger already listed: the tick runs no Spark directory listing, and
+a file deleted between that listing and its extraction fails the tick
+(the trigger stays armed and the retry's diff no longer holds it).
+Deletions are detected and reported but never delete warehouse rows
+(the reference's upsert cannot delete either).
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ from pyspark.sql import SparkSession
 
 from ..operators.merge import ParquetWarehouse
 from ..pipeline import run_document_batch, run_patient_batch
-from ..sources.binary_docs import ExtractFn, extract_documents, read_binary_documents
+from ..sources.binary_docs import ExtractFn, document_paths, extract_documents
 from ..sources.extractors import extract_text
 from ..sources.xlsx import read_patient_registry
 from .snapshot_diff import SnapshotState
@@ -60,13 +65,18 @@ class CdwDaemon:
         self.sheet_name = sheet_name
         self.extractor = extractor
         self.changed_only = changed_only
-        self.state = SnapshotState.load(os.path.join(warehouse_root, "_stream_state.json"))
-        # resume counters from the committed stream state: a restart
-        # that reset them would re-stamp rows with regressed UPLOAD_ID
-        # lineage and collide (filename, upload_id) quarantine keys
-        # from earlier runs; resumed counters also mean a restart is
-        # NOT a "first" batch, so the everything-is-new reload only
-        # happens on a genuinely fresh warehouse
+        self._load_state(os.path.join(warehouse_root, "_stream_state.json"))
+
+    def _load_state(self, path: str) -> None:
+        """(Re)load the persisted stream state: offsets and counters.
+
+        Counters resume from the committed stream state: a restart
+        that reset them would re-stamp rows with regressed UPLOAD_ID
+        lineage and collide (filename, upload_id) quarantine keys
+        from earlier runs; resumed counters also mean a restart is
+        NOT a "first" batch, so the everything-is-new reload only
+        happens on a genuinely fresh warehouse."""
+        self.state = SnapshotState.load(path)
         self.batch_number = self.state.counters.get("batch_number", 0)
         self.upload_id_patient = self.state.counters.get("upload_id_patient", 0)
         self.upload_id_document = self.state.counters.get("upload_id_document", 0)
@@ -77,10 +87,21 @@ class CdwDaemon:
         Snapshot offsets commit AFTER the batches succeed (peek →
         process → commit+save): a tick that throws mid-batch leaves
         the change trigger armed, so a supervisor's retry re-sees the
-        same diff instead of silently dropping it. A retry may re-run
-        an already-succeeded pipeline from the same tick — the MERGE
-        is idempotent, so replay heals, never corrupts.
+        same diff instead of silently dropping it. A failed tick also
+        returns the daemon to its last persisted state, counters
+        included, so an in-process retry replays the tick with the
+        same upload ids a restarted daemon would use. A retry may
+        re-run an already-succeeded pipeline from the same tick — the
+        MERGE is idempotent, so replay heals, never corrupts (tested
+        with faults at each commit boundary of a document tick).
         """
+        try:
+            return self._tick()
+        except BaseException:
+            self._load_state(self.state.path)
+            raise
+
+    def _tick(self) -> TickReport:
         self.batch_number += 1
         first = self.batch_number == 1
         report = TickReport(batch_number=self.batch_number)
@@ -103,27 +124,18 @@ class CdwDaemon:
         report.doc_changes = (doc_diff.new, doc_diff.modified, doc_diff.deleted)
         if first or doc_diff.changed:
             self.upload_id_document += 1
-            binary = read_binary_documents(self.spark, self.documents_dir)
-            if self.changed_only and not first:
-                touched = set(doc_diff.new + doc_diff.modified)
-                if touched:
-                    from pyspark.sql import functions as F
-
-                    binary = binary.filter(F.col("filename").isin(list(touched)))
-                else:
-                    binary = binary.limit(0)
-            # cache: the MERGE and the rejects collect share this
-            # lineage — without it the binaryFile scan + extraction
-            # (the most expensive stage) runs twice per tick
-            files = extract_documents(binary, self.extractor).cache()
-            try:
-                rejects = run_document_batch(
-                    self.wh, files, self.upload_id_document
-                )
-                report.documents_fired = True
-                report.rejects = [r["filename"] for r in rejects.collect()]
-            finally:
-                files.unpersist()
+            names = (
+                doc_diff.new + doc_diff.modified
+                if self.changed_only and not first
+                else tuple(doc_snap)
+            )
+            files = extract_documents(
+                document_paths(self.spark, self.documents_dir, names),
+                self.extractor,
+            )
+            rejects = run_document_batch(self.wh, files, self.upload_id_document)
+            report.documents_fired = True
+            report.rejects = [r["filename"] for r in rejects.collect()]
             if report.rejects:
                 # §2.9: quarantine sink instead of the reference's
                 # log-and-forget warning (exo_2.py:255-258)

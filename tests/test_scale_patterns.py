@@ -431,10 +431,15 @@ def test_phrase_search_two_stage_pruned_shape(spark):
 
 def test_dsir_scoring_pass_shape(spark):
     """docs_dsir_selection's returned plan is the SCORING pass only
-    (the two model-counting passes ran eagerly into the checkpointed
-    4096-row model): one corpus tokenize, the bucket model arriving by
-    broadcast hash join, exactly one doc_id exchange for the per-doc
-    fold, and a TakeOrdered top-k — never a global sort."""
+    (the model counts ran eagerly into the checkpointed 4096-row
+    model): the corpus is tokenized at most once per pass — the gram
+    pass runs once into a narrow (doc_id, lang, b) checkpoint that the
+    model counts fold from, so scoring re-reads that checkpoint and
+    tokenizes nothing — the bucket model arrives by broadcast hash
+    join, exactly one doc_id exchange for the per-doc fold, and a
+    TakeOrdered top-k — never a global sort."""
+    import re
+
     from data_engineer_challenge_spark import plans
 
     plans._load()
@@ -442,7 +447,8 @@ def test_dsir_scoring_pass_shape(spark):
         spark, "/root/testdata/sf0.001"
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("regexp_extract_all") == 1, plan
+    assert plan.count("regexp_extract_all") == 0, plan
+    assert re.search(r"Scan ExistingRDD\[doc_id#\d+L,lang#\d+,b#\d+L\]", plan), plan
     assert "BroadcastHashJoin" in plan, plan
     assert plan.count("Exchange hashpartitioning(doc_id") == 1, plan
     assert "TakeOrderedAndProject(limit=200" in plan, plan

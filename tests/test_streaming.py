@@ -182,6 +182,220 @@ def test_daemon_changed_only_mode(spark, tmp_path):
     assert rows == {"1": 1, "2": 2}
 
 
+def _changed_only_daemon(spark, root, extractor=None):
+    if not (root / "export_patient.xlsx").exists():
+        (root / "export_patient.xlsx").write_bytes(build_xlsx(REG_ROWS))
+    (root / "docs").mkdir(exist_ok=True)
+    kw = {} if extractor is None else {"extractor": extractor}
+    return CdwDaemon(
+        spark,
+        warehouse_root=str(root / "wh"),
+        registry_path=str(root / "export_patient.xlsx"),
+        documents_dir=str(root / "docs"),
+        changed_only=True,
+        **kw,
+    )
+
+
+def test_daemon_changed_only_extracts_exactly_the_diff(spark, tmp_path):
+    """A changed-only tick reads and extracts the diff's new and
+    modified files and nothing else — not the files already ingested.
+    An upper-case ``SCAN.PDF``-style extension dropped later is still
+    ingested, since the files come from the trigger's own snapshot."""
+    from data_engineer_challenge_spark.sources.extractors import extract_text
+
+    log = tmp_path / "extracted.log"
+
+    def recording(name, data):
+        # runs in the Python workers: record through the file system
+        with open(log, "a") as fh:
+            fh.write(name + "\n")
+        return extract_text(name, data)
+
+    def extracted():
+        names = log.read_text().split() if log.exists() else []
+        log.unlink(missing_ok=True)
+        return sorted(names)
+
+    docs = tmp_path / "docs"
+    docs.mkdir()
+    (docs / "00230580_1.pdf").write_bytes(build_pdf(["CR du 02/02/2002", "dr alpha"]))
+    (docs / "12345678_2.pdf").write_bytes(build_pdf(["le 03/03/2003", "dr beta"]))
+    daemon = _changed_only_daemon(spark, tmp_path, recording)
+    daemon.tick()
+    assert extracted() == ["00230580_1.pdf", "12345678_2.pdf"]  # first tick: all
+
+    (docs / "12345678_3.pdf").write_bytes(build_pdf(["le 04/04/2004", "dr gamma"]))
+    (docs / "00230580_4.PDF").write_bytes(build_pdf(["le 05/05/2005", "dr delta"]))
+    (docs / "00230580_1.pdf").write_bytes(build_pdf(["CR du 06/06/2006", "dr alpha"]))
+    os.utime(docs / "00230580_1.pdf", ns=(1, 1))
+    r = daemon.tick()
+    assert r.doc_changes[:2] == (("00230580_4.PDF", "12345678_3.pdf"), ("00230580_1.pdf",))
+    assert extracted() == ["00230580_1.pdf", "00230580_4.PDF", "12345678_3.pdf"]
+    rows = {r["ID_DOC_SOURCE"]: r for r in daemon.wh.read("DWH_DOCUMENT").collect()}
+    assert set(rows) == {"1", "2", "3", "4"}
+    assert rows["4"]["UPLOAD_ID"] == 2 and rows["2"]["UPLOAD_ID"] == 1
+    assert str(rows["1"]["DOCUMENT_DATE"]).startswith("2006-06-06")
+
+    assert not daemon.tick().documents_fired
+    assert extracted() == []
+
+
+def test_daemon_file_deleted_before_extraction_fails_the_tick(spark, tmp_path, monkeypatch):
+    """A file listed by the trigger but gone when its bytes are read
+    fails the tick loudly (it never silently drops out of the batch);
+    nothing commits, and the armed trigger's retry converges on the
+    files that are still there."""
+    docs = tmp_path / "docs"
+    docs.mkdir()
+    (docs / "00230580_1.pdf").write_bytes(build_pdf(["CR du 02/02/2002", "dr alpha"]))
+    daemon = _changed_only_daemon(spark, tmp_path)
+    daemon.tick()
+
+    (docs / "12345678_2.pdf").write_bytes(build_pdf(["le 03/03/2003", "dr beta"]))
+    (docs / "12345678_3.pdf").write_bytes(build_pdf(["le 04/04/2004", "dr gamma"]))
+    peek = daemon.state.peek
+
+    def peek_then_delete(key, *args, **kw):
+        out = peek(key, *args, **kw)
+        if key == "documents":
+            (docs / "12345678_3.pdf").unlink(missing_ok=True)
+        return out
+
+    monkeypatch.setattr(daemon.state, "peek", peek_then_delete)
+    with pytest.raises(Exception, match="12345678_3.pdf"):
+        daemon.tick()
+    assert daemon.wh.read("DWH_DOCUMENT").count() == 1
+    assert daemon.upload_id_document == 1  # the failed tick committed nothing
+
+    r = daemon.tick()  # the retry (its state reloaded, peek unpatched)
+    assert r.documents_fired and r.doc_changes[0] == ("12345678_2.pdf",)
+    assert r.upload_id_document == 2
+    assert {r["ID_DOC_SOURCE"] for r in daemon.wh.read("DWH_DOCUMENT").collect()} == {"1", "2"}
+    assert not daemon.tick().documents_fired
+
+
+def _document_tables(wh):
+    docs = {
+        r["ID_DOC_SOURCE"]: r.asDict()
+        for r in wh.read("DWH_DOCUMENT").drop("UPDATE_DATE").collect()
+    }
+    quarantine = {tuple(r) for r in wh.read("QUARANTINE_DOCUMENTS").collect()}
+    return docs, quarantine
+
+
+# the replayed tick's drop (a new file, an orphan, a rewrite of the
+# first tick's file) and the files that land between crash and retry
+_DROP_A = {
+    "12345678_2.pdf": ["le 03/03/2003", "dr beta"],
+    "99999999_3.pdf": ["le 04/04/2004", "dr orphan"],
+    "00230580_1.pdf": ["CR du 05/05/2005", "dr alpha bis"],
+}
+_DROP_B = {
+    "00230580_5.pdf": ["le 06/06/2006", "dr epsilon"],
+    "88888888_6.pdf": ["le 07/07/2007", "dr orphan bis"],
+}
+
+
+def _drop(root, files):
+    for name, lines in files.items():
+        (root / "docs" / name).write_bytes(build_pdf(lines))
+        os.utime(root / "docs" / name, ns=(2, 2))
+
+
+def _first_tick_then_drop_a(spark, root):
+    root.mkdir()
+    daemon = _changed_only_daemon(spark, root)
+    _drop(root, {"00230580_1.pdf": ["CR du 02/02/2002", "dr alpha"]})
+    os.utime(root / "docs" / "00230580_1.pdf", ns=(1, 1))
+    daemon.tick()
+    _drop(root, _DROP_A)
+    return daemon
+
+
+@pytest.fixture(scope="module")
+def clean_document_tables(spark, tmp_path_factory):
+    """The tables a fault-free run builds when its second tick sees
+    drop A, or drops A and B (``late``); built once per variant."""
+    built = {}
+
+    def get(late):
+        if late not in built:
+            root = tmp_path_factory.mktemp("clean") / "run"
+            daemon = _first_tick_then_drop_a(spark, root)
+            if late:
+                _drop(root, _DROP_B)
+            daemon.tick()
+            built[late] = _document_tables(daemon.wh)
+        return built[late]
+
+    return get
+
+
+@pytest.mark.parametrize(
+    "fault,retry,late",
+    [
+        ("quarantine", "in_process", False),
+        ("quarantine", "restart", True),
+        ("save", "in_process", True),
+        ("save", "restart", False),
+    ],
+)
+def test_daemon_document_tick_replay_converges(
+    spark, tmp_path, clean_document_tables, fault, retry, late
+):
+    """A document tick that crashes after its DWH_DOCUMENT commit —
+    before the quarantine merge, or before the stream state is saved —
+    is replayed by the retry (in process, or by a restarted daemon) to
+    the warehouse a clean run builds, even when more files land between
+    the crash and the retry: same rows and quarantine, unique
+    DOCUMENT_NUMs, and no number committed by the crashed tick
+    changes."""
+    want_docs, want_quarantine = clean_document_tables(late)
+    assert want_quarantine and len(want_docs) == 2 + late
+
+    root = tmp_path / "crash"
+    daemon = _first_tick_then_drop_a(spark, root)
+    if fault == "quarantine":
+        merge = daemon.wh.merge_upsert
+
+        def crash_before_quarantine(table, *args, **kw):
+            if table == "QUARANTINE_DOCUMENTS":
+                raise RuntimeError("crash before the quarantine merge")
+            return merge(table, *args, **kw)
+
+        daemon.wh.merge_upsert = crash_before_quarantine
+    else:
+        def crash_before_save():
+            raise RuntimeError("crash before state.save()")
+
+        daemon.state.save = crash_before_save
+    with pytest.raises(RuntimeError, match="crash before"):
+        daemon.tick()
+    committed = {
+        r["ID_DOC_SOURCE"]: r["DOCUMENT_NUM"]
+        for r in daemon.wh.read("DWH_DOCUMENT").collect()
+    }
+    assert set(committed) == {"1", "2"}  # the DWH_DOCUMENT commit landed
+    if late:
+        _drop(root, _DROP_B)
+    if retry == "restart":
+        daemon = _changed_only_daemon(spark, root)
+    elif fault == "quarantine":
+        del daemon.wh.merge_upsert  # the fault was in the crashed process only
+    r = daemon.tick()
+    assert r.documents_fired and r.upload_id_document == 2
+
+    got_docs, got_quarantine = _document_tables(daemon.wh)
+    nums = [d["DOCUMENT_NUM"] for d in got_docs.values()]
+    assert len(set(nums)) == len(nums)
+    assert {k: got_docs[k]["DOCUMENT_NUM"] for k in committed} == committed
+    strip = lambda t: {k: {c: v for c, v in d.items() if c != "DOCUMENT_NUM"} for k, d in t.items()}
+    assert strip(got_docs) == strip(want_docs)
+    assert got_quarantine == want_quarantine
+    assert not daemon.tick().documents_fired  # the replay committed its offsets
+
+
 @pytest.mark.parametrize("builder", [tumbling_counts, sliding_counts, session_counts])
 def test_stream_windows_match_batch(spark, tmp_path, builder):
     from data_engineer_challenge_spark.schemas import TESTDATA

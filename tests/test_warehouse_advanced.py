@@ -223,6 +223,39 @@ def test_merge_raises_on_duplicate_source_keys(spark, tmp_path):
         wh.merge_upsert("part", dup, ["k"])
 
 
+def test_merge_evaluates_source_once(spark, tmp_path):
+    """An unpartitioned MERGE runs its source plan once: the
+    duplicate-key guard fills a cache that the write reads, so the
+    rows written are the rows checked. A row-counting UDF sees each of
+    the N source rows exactly once (twice or more would mean the guard
+    and the write each recomputed the source). A duplicate-key source
+    still raises."""
+    import pytest
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh.overwrite("flat", spark.range(0, 20).select(F.col("id").alias("k"), F.col("id").alias("v")))
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(k):
+        seen.add(1)
+        return k
+
+    n = 15
+    source = spark.range(10, 10 + n).select(
+        counted("id").alias("k"), (F.col("id") * 100).alias("v")
+    )
+    wh.merge_upsert("flat", source, ["k"])
+    assert seen.value == n
+    got = {r["k"]: r["v"] for r in wh.read("flat").collect()}
+    assert len(got) == 10 + n and got[9] == 9 and got[10] == 1000 and got[24] == 2400
+
+    dup = spark.range(0, 4).select(counted(F.col("id") % 2).alias("k"), F.col("id").alias("v"))
+    with pytest.raises(ValueError, match="multiple rows"):
+        wh.merge_upsert("flat", dup, ["k"])
+    assert wh.read("flat").count() == 10 + n
+
+
 def test_merge_into_empty_partitioned_table(spark, tmp_path):
     """The create-empty-then-stream-into lifecycle: a partitioned
     table created with zero rows has no partition dirs, so the pruned
