@@ -67,9 +67,8 @@ from pyspark.sql import functions as F
 
 from .compaction import locked_writer, probe_local_retry, writer_lock
 from ..localrel import local_rows_df
-from ..parallelism import spread
 from .similarity import _require_long_ids
-from .text_dedup import hashed_shingles, jaccard, minhash_bands_vectorized
+from .text_dedup import cached_shingles, jaccard, minhash_bands_vectorized
 
 #: maybe_rebucket trigger (the text index's TEXT_TARGET_BUCKET_ROWS
 #: posture for the band-hash layout) — production-sized default;
@@ -231,26 +230,19 @@ class MinHashIndex:
         return F.pmod(F.hash(F.col(col)), F.lit(self.meta["bh_buckets"]))
 
     def _prepare(self, docs: DataFrame, id_col: str, text_col: str):
-        """(id, hs) + (band, bh, id, bh_bucket) frames for a batch."""
+        """``(hashed, base, banded)`` for a batch: the CACHED
+        ``text_dedup.cached_shingles`` frame (the caller unpersists
+        it), the batch's non-empty ``(id, hs)`` rows read from it, and
+        its ``(band, bh, id, bh_bucket)`` postings."""
         _require_long_ids(docs, id_col, "MinHashIndex")
-        base = (
-            spread(
-                docs.select(
-                    F.col(id_col).alias("id"),
-                    F.col(text_col).alias("__text"),
-                ),
-                "id",
-            )
-            .withColumn(
-                "hs", hashed_shingles(F.col("__text"), self.meta["shingle_n"])
-            )
-            .filter(F.size("hs") > 0)
-            .select("id", "hs")
+        hashed, nonempty = cached_shingles(
+            docs, id_col, text_col, self.meta["shingle_n"]
+        )
+        base = nonempty.select(
+            F.col("__id").alias("id"), F.col("__hs").alias("hs")
         )
         banded = minhash_bands_vectorized(
-            base.withColumnRenamed("id", "__id").withColumnRenamed(
-                "hs", "__hs"
-            ),
+            nonempty,
             num_hashes=self.meta["num_hashes"],
             bands=self.meta["bands"],
         ).select(
@@ -258,7 +250,7 @@ class MinHashIndex:
             F.col("__bh").alias("bh"),
             F.col("__id").alias("id"),
         ).withColumn("bh_bucket", self._bucket_expr())
-        return base, banded
+        return hashed, base, banded
 
     def _write_meta(self) -> None:
         meta_dir = os.path.join(self.path, "meta")
@@ -269,11 +261,11 @@ class MinHashIndex:
     # -- public API --------------------------------------------------
 
     def _write(self, docs: DataFrame, id_col: str, text_col: str, mode: str) -> None:
-        base, banded = self._prepare(docs, id_col, text_col)
-        # cache for the two writes, then RELEASE: a streaming ingest
-        # calls append() every micro-batch, and un-unpersisted caches
-        # would accumulate for the life of the session
-        base = base.cache()
+        # the shingles are cached for the two writes, then RELEASED: a
+        # streaming ingest calls append() every micro-batch, and
+        # un-unpersisted caches would accumulate for the life of the
+        # session
+        hashed, base, banded = self._prepare(docs, id_col, text_col)
         try:
             # hash-partitioned layouts: probes prune both stored
             # tables to the buckets they can match (module docstring).
@@ -323,7 +315,7 @@ class MinHashIndex:
                 for f in futs:
                     f.result()  # re-raise either side's failure
         finally:
-            base.unpersist()
+            hashed.unpersist()
 
     @locked_writer
     def build(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> None:
@@ -359,14 +351,15 @@ class MinHashIndex:
             return local_rows_df(
                 self.spark, [], "new_id long, dup_of long, jaccard double"
             )
-        new_base, new_banded = self._prepare(docs, id_col, text_col)
+        new_hashed, new_base, new_banded = self._prepare(
+            docs, id_col, text_col
+        )
         # cache: the candidate join consumes new_banded and the verify
         # stage consumes new_base — without this the batch's source
         # scan, shingle hashing and repartition all run twice per
-        # probe. release() (or the caller's clearCache) frees it once
-        # the probe result is materialized.
-        new_base = new_base.cache()
-        self._cached.append(new_base)
+        # probe. release() (or the caller's clearCache) frees both
+        # once the probe result is materialized.
+        self._cached.append(new_hashed)
         new_banded = new_banded.cache()
         self._cached.append(new_banded)
         # which posting buckets can this batch possibly match? A

@@ -186,6 +186,46 @@ def hashed_shingles(col: Column | str, n: int = 2, pre_tokenized: bool = False) 
 _CACHED_FRAMES: list = []
 
 
+def cached_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int = 2,
+    block_cols: tuple[str, ...] = (),
+    partitions: int | None = None,
+    pre_tokenized: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """``(hashed, nonempty)``: every document's :func:`hashed_shingles`
+    as a cached ``(__id, *block_cols, __hs)`` frame, and that frame
+    without the documents whose set is empty. The caller owns the
+    cache and unpersists ``hashed`` when done.
+
+    The input is spread first (a single-file input scans as one task);
+    an explicit ``partitions`` repartitions unconditionally. The empty
+    filter runs on the cached frame on purpose: over the uncached plan
+    Catalyst pushes ``size(__hs) > 0`` below the repartition, so the
+    hashing would run once on the scan's tasks for the filter and
+    again after the exchange (parallelism.py module docstring)."""
+    cols = (
+        F.col(id_col).alias("__id"),
+        *[F.col(c) for c in block_cols],
+        F.col(text_col).alias("__text"),
+    )
+    src = (
+        spread(df.select(*cols), "__id")
+        if partitions is None
+        else df.select(*cols).repartition(partitions, "__id")
+    )
+    hashed = src.select(
+        "__id",
+        *block_cols,
+        hashed_shingles(F.col("__text"), shingle_n, pre_tokenized).alias(
+            "__hs"
+        ),
+    ).cache()
+    return hashed, hashed.filter(F.size("__hs") > 0)
+
+
 def release_cached() -> None:
     """Unpersist every frame minhash_candidate_pairs has cached so
     far — the targeted alternative to a session-wide clearCache for
@@ -219,8 +259,10 @@ def minhash_candidate_pairs(
     ``block_cols`` adds hard blocking keys (e.g. lang) to the band
     join: pairs must agree on them, mirroring an exhaustive
     within-block baseline, and hot band buckets split across blocks.
-    ``partitions`` spreads the per-document hashing (the input is often
-    one parquet file = one task without it).
+    The per-document hashing runs on the input spread to
+    ``defaultParallelism`` partitions when its scan is narrower (one
+    parquet file is one task); ``partitions`` repartitions to that
+    count unconditionally instead (:func:`cached_shingles`).
 
     ``max_bucket_size`` is the skew guard for power-law content: a band
     bucket holding B documents yields B²/2 candidate pairs inside ONE
@@ -243,40 +285,18 @@ def minhash_candidate_pairs(
     targeted equivalent of ``MinHashIndex.release()`` — or a blanket
     ``spark.catalog.clearCache()`` between rounds, as bench.py does.
     """
-    blocks = [F.col(c) for c in block_cols]
-    # materialize hashed shingles once (cached): the self-join and the
-    # verification stage would otherwise re-tokenize per use.
-    # Conditional spread (r14): the repartition is a local/small-input
-    # parallelism fix — an input already scanned in >= that many
-    # partitions skips the text shuffle (parallelism.spread rationale);
-    # an EXPLICIT ``partitions`` is honored unconditionally.
-    base = (
-        spread(
-            df.select(
-                F.col(id_col).alias("__id"),
-                *blocks,
-                F.col(text_col).alias("__text"),
-            ),
-            "__id",
-            min_partitions=partitions,
-        )
-        if partitions is None
-        else df.select(
-            F.col(id_col).alias("__id"),
-            *blocks,
-            F.col(text_col).alias("__text"),
-        ).repartition(partitions, "__id")
+    # shingles hashed once per document into a cache the band join
+    # and the verification stage share
+    hashed, base = cached_shingles(
+        df,
+        id_col,
+        text_col,
+        shingle_n,
+        block_cols=block_cols,
+        partitions=partitions,
+        pre_tokenized=pre_tokenized,
     )
-    base = (
-        base
-        .withColumn(
-            "__hs", hashed_shingles(F.col("__text"), shingle_n, pre_tokenized)
-        )
-        .filter(F.size("__hs") > 0)
-        .select("__id", *block_cols, "__hs")
-        .cache()
-    )
-    _CACHED_FRAMES.append(base)
+    _CACHED_FRAMES.append(hashed)
     # band join carries only (blocks, band, hash, id) — the shingle
     # arrays never enter the shuffle
     banded = minhash_bands_vectorized(
@@ -307,9 +327,11 @@ def minhash_candidate_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # verification re-attaches hashed shingles per side from the cache
-    sha = base.select(F.col("__id").alias("id_a"), F.col("__hs").alias("__sha"))
-    shb = base.select(F.col("__id").alias("id_b"), F.col("__hs").alias("__shb"))
+    # verification re-attaches hashed shingles per side from the cache;
+    # it may read the unfiltered one, since candidate ids come only
+    # from documents with a non-empty set
+    sha = hashed.select(F.col("__id").alias("id_a"), F.col("__hs").alias("__sha"))
+    shb = hashed.select(F.col("__id").alias("id_b"), F.col("__hs").alias("__shb"))
     return (
         cands.join(sha, "id_a")
         .join(shb, "id_b")
@@ -417,6 +439,11 @@ def simhash_candidate_pairs(
     # Arrow-vectorized twin (memoized md5 + numpy votes) was built,
     # measured no better in steady state, and showed bimodal 2-4x
     # slow runs from the Python worker boundary — reverted.
+    # Token-less documents get a NULL fingerprint inside the cached
+    # projection and are dropped on the cached frame: a filter on the
+    # tokens over the uncached plan is pushed below the spread's
+    # exchange and tokenizes every document twice (parallelism.py).
+    toks = F.col("__toks")
     sh = (
         spread(
             df.select(
@@ -425,13 +452,14 @@ def simhash_candidate_pairs(
             "__id",
         )
         .select("__id", word_tokens(F.col("__t")).alias("__toks"))
-        .filter(F.size("__toks") > 0)
-        .select("__id", simhash60(F.col("__toks")).alias("__sh"))
+        .select(
+            "__id", F.when(F.size(toks) > 0, simhash60(toks)).alias("__sh")
+        )
         .cache()
     )
     _CACHED_FRAMES.append(sh)  # released via release_cached(), same
     # lifetime contract as the minhash postings cache
-    bands = sh.select(
+    bands = sh.where(F.col("__sh").isNotNull()).select(
         "__id",
         "__sh",
         F.posexplode(

@@ -30,6 +30,15 @@ settings (the same arithmetic Spark's FilePartition packing uses);
 anything else — upstream exchanges, cached inputs, local relations —
 falls back to the unconditional repartition (the pre-r14 behavior,
 always correct, never double-executes).
+
+Pitfall: a filter on a kernel's OUTPUT placed after the spread is
+pushed below its repartition. ``spread(df, k).withColumn("h",
+kernel(c)).filter(size("h") > 0)`` optimizes to a filter that runs
+``kernel`` on the scan's tasks (one task for a single-file input),
+under the exchange, and the projection runs it again above it. Either
+filter on a frame cached after the kernel (Catalyst cannot push past
+the cache; ``operators/text_dedup.cached_shingles``) or filter on a
+predicate over the input columns only.
 """
 
 from __future__ import annotations

@@ -16,6 +16,7 @@ from ..functions.cleaning import WS_CLASS as _WS  # \s diverges Java/RE2
 from ..functions.tokenize import TOKEN_RE, word_tokens as tokens
 from ..localrel import local_rows_df
 from ..operators.text_dedup import _CACHED_FRAMES
+from ..parallelism import spread
 from ..tables import load_table
 from . import register
 from .helpers import (
@@ -1288,11 +1289,14 @@ def _register_curation_funnel() -> None:
         would diverge (selection statistics contaminated by documents
         the earlier stages removed).
 
-        Scale shape: stage 1 is the one-pass broadcast scorer; stage 2
-        one fingerprint shuffle over keepers; stage 3 the DSIR
-        three-pass shape over survivors only — strictly less data at
-        every stage, no stage re-reads the raw corpus after stage 1's
-        gate."""
+        Scale shape: stage 1 is the one-pass scorer over the corpus
+        spread on ``doc_id`` (one text shuffle when the corpus scans in
+        fewer than ``defaultParallelism`` partitions, none otherwise;
+        the scorer's per-doc aggregate and join back reuse that
+        partitioning); stage 2 one fingerprint shuffle over keepers;
+        stage 3 the DSIR three-pass shape over survivors only —
+        strictly less data at every stage, no stage re-reads the raw
+        corpus after stage 1's gate."""
         return curation_funnel(load_table(spark, sf_dir, "documents"))
 
     @register(
@@ -1456,9 +1460,21 @@ def curation_funnel(
     document the gate removes must vanish from DSIR's raw/target
     bucket models, and dedup's keep-first runs among gate SURVIVORS
     (a group's lowest-id member being gated hands the group to its
-    next survivor)."""
+    next survivor).
+
+    The input is spread on ``doc_id`` before the scorer
+    (``parallelism.spread``): a small corpus is one parquet file, which
+    scans as one task, and the scorer's per-document kernels
+    (tokenize, grams, ``md5_long`` per gram) would otherwise run on a
+    single core. A corpus already scanning in ``defaultParallelism``
+    or more partitions passes through with no shuffle. The hash
+    partitioning on ``doc_id`` also serves the scorer's per-doc
+    aggregate and its join back on ``doc_id``, so neither adds an
+    exchange. Results do not depend on it: every kernel is
+    row-deterministic, the score sum is exact decimal, and the dedup
+    window orders by ``doc_id``."""
     scorer = with_quality_score if scorer is None else scorer
-    kept = scorer(docs).where(F.col("is_kept"))
+    kept = scorer(spread(docs, "doc_id")).where(F.col("is_kept"))
     from pyspark.sql.window import Window as _W
 
     uniq = (

@@ -115,3 +115,47 @@ def build_pdf(lines: list[str]) -> bytes:
     )
     parts.append(b"%%EOF\n")
     return b"".join(parts)
+
+
+def write_corpus_layouts(root, corpus, n_files: int) -> tuple[str, str]:
+    """Writes a ``perfbench.gen.Corpus`` twice under ``root``, the way
+    the benchmark writes it: as one parquet file with one row group,
+    and split in ``n_files`` files. Returns both paths."""
+    import os
+
+    from perfbench.curation import _write_corpus
+    from perfbench.gen import Corpus
+
+    one = os.path.join(str(root), "one.parquet")
+    _write_corpus(corpus, one)
+    many = os.path.join(str(root), "many")
+    os.makedirs(many)
+    step = -(-len(corpus.rows) // n_files)
+    for i in range(n_files):
+        part = Corpus(corpus.rows[i * step:(i + 1) * step], set(), {})
+        _write_corpus(part, os.path.join(many, f"part-{i:03d}.parquet"))
+    return one, many
+
+
+def plan_subtrees(plan: str, marker: str) -> list[str]:
+    """The node lines below every node of a Spark plan tree string
+    whose line contains ``marker`` (one string per such node, its
+    subtree's lines joined)."""
+    import re
+
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    out = []
+    for i, line in enumerate(lines):
+        if marker in line:
+            d, sub = depth(line), []
+            for below in lines[i + 1:]:
+                if depth(below) <= d:
+                    break
+                sub.append(below)
+            out.append("\n".join(sub))
+    return out

@@ -359,6 +359,49 @@ def test_curation_funnel_stage_interaction_adversarial_scorer(spark):
     assert all_kept[5]["log_weight"] != gated[5]["log_weight"]
 
 
+def test_curation_funnel_spreads_a_single_scan_task_corpus(spark, tmp_path):
+    """A single-file corpus scans as one task: the funnel spreads it on
+    doc_id before the scorer, so tokenizing and gram hashing run on
+    every core, and the scorer's per-doc aggregate reuses that
+    partitioning (no second exchange on doc_id). A corpus already
+    written as defaultParallelism files is scanned as is."""
+    import random
+    import re
+
+    from data_engineer_challenge_spark.plans.text import (
+        curation_funnel, with_quality_score,
+    )
+    from perfbench.gen import make_corpus
+
+    from .fixtures import plan_subtrees, write_corpus_layouts
+
+    par = spark.sparkContext.defaultParallelism
+    one, many = write_corpus_layouts(
+        tmp_path, make_corpus(random.Random(3), 300), par
+    )
+
+    def scorer_plan(path: str) -> str:
+        seen = []
+
+        def scorer(d):
+            seen.append(with_quality_score(d))
+            return seen[-1]
+
+        curation_funnel(spark.read.parquet(path), scorer=scorer)
+        return seen[0]._jdf.queryExecution().executedPlan().toString()
+
+    spread_exchange = re.compile(
+        rf"Exchange hashpartitioning\(doc_id#\d+L, {par}\), REPARTITION_BY_NUM"
+    )
+    plan = scorer_plan(one)
+    tokenizers = plan_subtrees(plan, "regexp_extract_all")
+    assert tokenizers and all(spread_exchange.search(t) for t in tokenizers), plan
+    assert "ENSURE_REQUIREMENTS" not in plan, plan
+
+    plan = scorer_plan(many)
+    assert "regexp_extract_all" in plan and "REPARTITION_BY_NUM" not in plan, plan
+
+
 def test_dsir_selection_ranks_target_like_docs_first(spark, tmp_path):
     """DSIR semantics on a planted corpus: among the non-English docs,
     the one written in the English slice's vocabulary must outrank the

@@ -3,6 +3,7 @@ tiers must find what the exhaustive baselines find."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineer_challenge_spark.operators.text_dedup import (
@@ -637,12 +638,107 @@ def test_minhash_index_probe_prunes_posting_buckets(spark, tmp_path):
     # ...to a strict subset: one doc emits `bands` postings, hashing
     # into at most `bands` buckets — fewer than the corpus populated.
     # Recompute the touched set with the index's own bucket expression.
-    _, one_banded = idx._prepare(one, "doc_id", "text")
+    one_hashed, _, one_banded = idx._prepare(one, "doc_id", "text")
     touched = {r[0] for r in one_banded.select("bh_bucket").distinct().collect()}
+    one_hashed.unpersist()
     assert touched and len(touched) < len(bucket_dirs), (touched, bucket_dirs)
     # and correctness is unchanged: the renamed copy still matches its
     # indexed original through the pruned scan
     assert probed.count() >= 1
+
+
+def _kernel_lines_below_spread(plan: str) -> list[str]:
+    """Plan lines under a ``REPARTITION_BY_NUM`` exchange (the spread)
+    that run a text kernel: tokenizing or hashing there means a filter
+    on the kernel's output was pushed below the exchange, onto the
+    scan's tasks."""
+    from .fixtures import plan_subtrees
+
+    return [
+        line
+        for sub in plan_subtrees(plan, "REPARTITION_BY_NUM")
+        for line in sub.splitlines()
+        if "regexp_extract_all" in line or "xxhash64" in line
+    ]
+
+
+@pytest.mark.parametrize(
+    "op", ["minhash_candidate_pairs", "MinHashIndex._prepare", "simhash_candidate_pairs"]
+)
+def test_text_kernels_run_once_above_the_spread(spark, tmp_path, op):
+    """A single-file input scans as one task, so these operators spread
+    it first. The tokenizer and shingle hashing must then run only
+    above the exchange, once per document: the empty-set filter
+    belongs on the cached frame, where Catalyst cannot push it below
+    the repartition."""
+    from data_engineer_challenge_spark.operators.dedup_index import MinHashIndex
+    from data_engineer_challenge_spark.operators.text_dedup import release_cached
+    from data_engineer_challenge_spark.parallelism import _scan_parallelism
+
+    from .conftest import SF_SMOKE
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    assert _scan_parallelism(docs) < spark.sparkContext.defaultParallelism
+    cached = []
+    if op == "minhash_candidate_pairs":
+        frames = [minhash_candidate_pairs(docs, "doc_id", "text")]
+    elif op == "simhash_candidate_pairs":
+        frames = [simhash_candidate_pairs(docs, "doc_id", "text")]
+    else:
+        idx = MinHashIndex(spark, str(tmp_path / "idx"))
+        hashed, base, banded = idx._prepare(docs, "doc_id", "text")
+        cached.append(hashed)
+        frames = [base, banded]
+    try:
+        for df in frames:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "REPARTITION_BY_NUM" in plan and "regexp_extract_all" in plan, plan
+            assert not _kernel_lines_below_spread(plan), plan
+    finally:
+        for df in cached:
+            df.unpersist()
+        release_cached()
+
+
+def test_curation_pass_same_results_for_both_corpus_layouts(spark, tmp_path):
+    """One seeded corpus written as one file (spread before the text
+    kernels) and as ``defaultParallelism`` files (scanned as is): the
+    funnel selects the same rows from both, equal to the DuckDB
+    ``funnel_sql`` oracle, and MinHash finds the same pairs."""
+    import random
+
+    import duckdb
+
+    from data_engineer_challenge_spark.operators.text_dedup import release_cached
+    from data_engineer_challenge_spark.parallelism import _scan_parallelism
+    from data_engineer_challenge_spark.plans.text import curation_funnel, funnel_sql
+    from perfbench.gen import make_corpus
+
+    from .fixtures import write_corpus_layouts
+
+    par = spark.sparkContext.defaultParallelism
+    corpus = make_corpus(random.Random(11), 800)
+    one, many = write_corpus_layouts(tmp_path, corpus, par)
+    layouts = [spark.read.parquet(one), spark.read.parquet(many)]
+    assert _scan_parallelism(layouts[0]) < par <= _scan_parallelism(layouts[1])
+
+    want = sorted(duckdb.sql(funnel_sql(f"read_parquet('{one}')")).fetchall())
+    assert want  # the quality gate keeps a few dozen of the 800
+    got = [sorted(map(tuple, curation_funnel(d).collect())) for d in layouts]
+    assert got[0] == got[1] == want
+
+    try:
+        pairs = [
+            {
+                (r["id_a"], r["id_b"])
+                for r in minhash_candidate_pairs(d, "doc_id", "text").collect()
+            }
+            for d in layouts
+        ]
+    finally:
+        release_cached()
+    assert pairs[0] == pairs[1]
+    assert corpus.near_pairs and corpus.near_pairs <= pairs[0]
 
 
 def test_winnowing_parity_fuzz(spark):
