@@ -33,14 +33,64 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 #: derived partition column for the pruned-MERGE layout
 PKEY = "__pkey"
 _META = "_wh_meta.json"  # leading underscore: invisible to parquet scans
+#: prefix of the error a guarded write raises, followed by the key as JSON
+_DUP_MARKER = "merge_upsert duplicate source key: "
 
 
 def _pkey_col(keys: Sequence[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+
+
+def _write_meta(table_dir: str, meta: dict) -> None:
+    with open(os.path.join(table_dir, _META), "w") as fh:
+        json.dump(meta, fh)
+
+
+def _duplicate_key_error(table: str, key_vals: dict) -> ValueError:
+    """Real ``MERGE INTO`` raises when several source rows match one
+    target row; silently unioning both copies would leave the table
+    with duplicate keys forever."""
+    return ValueError(
+        f"merge_upsert into {table!r}: source has multiple rows "
+        f"for key {key_vals} — dedup the source first (e.g. "
+        "keep_first_dedup); a keyed MERGE must see at most one "
+        "source row per key"
+    )
+
+
+def _fail_on_duplicate_keys(src: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """``src`` unchanged, except that the job which reads it fails at a
+    key with several source rows, raising :data:`_DUP_MARKER` and the
+    key as JSON (:func:`_raised_duplicate_key` reads it back). The
+    count feeds a filter, so column pruning cannot drop the guard. A
+    window partition, like ``groupBy``, holds all null keys together:
+    two null-key rows raise."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    key = F.to_json(F.struct(*keys), {"ignoreNullFields": "false"})
+    boom = F.raise_error(F.concat(F.lit(_DUP_MARKER), key))
+    return (
+        src.withColumn("__rows_per_key", n)
+        .filter(F.when(F.col("__rows_per_key") > 1, boom).otherwise(F.lit(True)))
+        .drop("__rows_per_key")
+    )
+
+
+def _raised_duplicate_key(exc: Exception) -> dict | None:
+    """The key a :func:`_fail_on_duplicate_keys` guard raised on, or
+    None if ``exc`` is another failure."""
+    msg = str(exc)
+    # followed by the key's JSON object: a plan printed in an analysis
+    # error carries the marker too, as a bare literal
+    at = msg.find(_DUP_MARKER + "{")
+    if at < 0:
+        return None
+    key, _ = json.JSONDecoder().raw_decode(msg, at + len(_DUP_MARKER))
+    return key
 
 
 class ParquetWarehouse:
@@ -65,11 +115,22 @@ class ParquetWarehouse:
         return os.path.isdir(self._live_path(table))
 
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
+        """The table's rows. Without ``schema``, the schema recorded at
+        the last swap is used, so the read plans without a schema
+        inference job; a table written before schemas were recorded
+        falls back to inference."""
+        if schema is None:
+            reader = self._reader(self._meta(table))
+        else:
+            reader = self.spark.read.schema(schema)
         df = reader.parquet(self._live_path(table))
         return df.drop(PKEY) if PKEY in df.columns else df
+
+    def _reader(self, meta: dict):
+        recorded = meta.get("schema")
+        if recorded is None:
+            return self.spark.read
+        return self.spark.read.schema(T.StructType.fromJson(recorded))
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         self._stage_and_swap(table, df)
@@ -101,12 +162,15 @@ class ParquetWarehouse:
             meta={"partition_keys": list(keys), "n_buckets": n_buckets},
         )
 
-    def _meta(self, table: str) -> dict | None:
+    def _meta(self, table: str) -> dict:
+        """The table's sidecar: its ``schema`` (recorded at every swap)
+        and, for the pruned-MERGE layout, ``partition_keys`` and
+        ``n_buckets``. Empty for a table with no sidecar."""
         mp = os.path.join(self._live_path(table), _META)
         if os.path.isfile(mp):
             with open(mp) as fh:
                 return json.load(fh)
-        return None
+        return {}
 
     def _recover_swap(self, table: str) -> None:
         """Heal a crashed :meth:`_stage_and_swap`: if only the ``.old``
@@ -158,29 +222,6 @@ class ParquetWarehouse:
             else:
                 os.rename(parked, live)
 
-    def _check_unique_source(
-        self, source: DataFrame, keys: Sequence[str], table: str
-    ) -> None:
-        """Real ``MERGE INTO`` raises when several source rows match
-        one target row; silently unioning both copies would leave the
-        table with duplicate keys forever. One small aggregation over
-        the (micro-batch-sized) source."""
-        dup = (
-            source.groupBy(*keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            key_vals = {k: dup[0][k] for k in keys}
-            raise ValueError(
-                f"merge_upsert into {table!r}: source has multiple rows "
-                f"for key {key_vals} — dedup the source first (e.g. "
-                "keep_first_dedup); a keyed MERGE must see at most one "
-                "source row per key"
-            )
-
     def merge_upsert(
         self, table: str, source: DataFrame, keys: Sequence[str]
     ) -> None:
@@ -201,12 +242,19 @@ class ParquetWarehouse:
         MERGE INTO semantics) instead of silently breaking the
         table's key invariant.
 
-        On both paths the source plan runs once: it is cached, the
-        duplicate-key guard's action fills the cache and the write
-        reads it back (tested with a row-counting UDF)."""
+        The source plan runs once: it is cached, and on the
+        unpartitioned path the anti-join's keys and the written rows
+        both read the cache (tested with a row-counting UDF). The
+        duplicate-key guard rides the write there — a per-key count
+        over the cached source fails the write job itself at the first
+        duplicate key, before anything is swapped in — so a merge is
+        one Spark action, and the target is read with the schema
+        recorded at its last swap instead of an inference job. The
+        partitioned path runs one aggregate over the cached source
+        before its write (see :meth:`_merge_pruned`)."""
         self._recover_swap(table)
-        meta = self._meta(table) if self.exists(table) else None
-        if meta is not None:
+        meta = self._meta(table) if self.exists(table) else {}
+        if "partition_keys" in meta:
             if list(keys) != meta["partition_keys"]:
                 raise ValueError(
                     f"table {table!r} is partitioned on "
@@ -216,25 +264,29 @@ class ParquetWarehouse:
                     "overwrite_partitioned if the key change is "
                     "intentional)"
                 )
-            self._merge_pruned(table, source, keys, meta["n_buckets"])
+            self._merge_pruned(table, source, keys, meta)
             return
-        # the guard's action fills the cache and the write reads it:
-        # the source plan runs once, and the rows written are the rows
-        # checked even when the source is non-deterministic
+        # the rows written are the rows checked, even when the source
+        # is non-deterministic
         src = source.cache()
         try:
-            self._check_unique_source(src, keys, table)
-            if not self.exists(table):
-                self._stage_and_swap(table, src)
-                return
-            target = self.read(table)
-            kept = target.join(src.select(*keys), on=list(keys), how="left_anti")
-            self._stage_and_swap(table, kept.unionByName(src))
+            rows = _fail_on_duplicate_keys(src, keys)
+            if self.exists(table):
+                kept = self.read(table).join(
+                    src.select(*keys), on=list(keys), how="left_anti"
+                )
+                rows = kept.unionByName(rows)
+            self._stage_and_swap(table, rows)
+        except Exception as exc:
+            dup = _raised_duplicate_key(exc)
+            if dup is None:
+                raise
+            raise _duplicate_key_error(table, dup) from None
         finally:
             src.unpersist()
 
     def _merge_pruned(
-        self, table: str, source: DataFrame, keys: Sequence[str], n_buckets: int
+        self, table: str, source: DataFrame, keys: Sequence[str], meta: dict
     ) -> None:
         """Crash contract: the commit swaps one partition directory at
         a time, so — unlike :meth:`_stage_and_swap`'s whole-table
@@ -261,14 +313,26 @@ class ParquetWarehouse:
         place — O(touched) metadata ops. The earlier form paid a
         second full Spark job (unpartitioned staging, re-read, dynamic
         partition overwrite) that rewrote every merged row twice and
-        inherited the committer's delete-before-rename loss window."""
+        inherited the committer's delete-before-rename loss window.
+
+        Before the write, ONE aggregate over the cached source returns
+        the touched buckets and, per bucket, the key with the most
+        source rows: the duplicate-key guard and the bucket list share
+        one Spark action."""
         final = self.path(table)
+        n_buckets = meta["n_buckets"]
         # the micro-batch is used twice (touched-bucket scan, then the
         # union) — cache it rather than recompute the source plan
         src = source.withColumn(PKEY, _pkey_col(keys, n_buckets)).cache()
         try:
-            self._check_unique_source(src, keys, table)
-            touched = sorted(r[0] for r in src.select(PKEY).distinct().collect())
+            top = F.max(F.struct("count", F.struct(*keys).alias("key")))
+            buckets = (
+                src.groupBy(PKEY, *keys).count().groupBy(PKEY).agg(top.alias("top"))
+            ).collect()
+            for r in buckets:
+                if r["top"]["count"] > 1:
+                    raise _duplicate_key_error(table, r["top"]["key"].asDict())
+            touched = sorted(r[PKEY] for r in buckets)
             if not touched:
                 return  # empty micro-batch (a streaming replay tick):
                 # nothing to merge, and an empty staging dir would fail
@@ -282,9 +346,11 @@ class ParquetWarehouse:
                 src.hint("rebalance", PKEY).write.mode("append").partitionBy(
                     PKEY
                 ).parquet(final)
+                # the first batch's files define the table's schema
+                _write_meta(final, {**meta, "schema": src.schema.jsonValue()})
                 return
             # partition pruning: only touched __pkey dirs are scanned
-            tgt = self.spark.read.parquet(final).filter(F.col(PKEY).isin(touched))
+            tgt = self._reader(meta).parquet(final).filter(F.col(PKEY).isin(touched))
             kept = tgt.drop(PKEY).join(
                 src.select(*keys), on=list(keys), how="left_anti"
             )
@@ -337,9 +403,9 @@ class ParquetWarehouse:
                 df.write.mode("overwrite").parquet(staging)
             else:
                 writer(df, staging)
-            if meta is not None:
-                with open(os.path.join(staging, _META), "w") as fh:
-                    json.dump(meta, fh)
+            # the schema rides along, so reads and merges need no
+            # schema inference job
+            _write_meta(staging, {**(meta or {}), "schema": df.schema.jsonValue()})
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise

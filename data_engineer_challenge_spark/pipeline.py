@@ -247,8 +247,8 @@ def run_document_batch(
     exist keep their DOCUMENT_NUM; genuinely new rows continue the
     sequence from the current max.
 
-    The resolved documents are cached: the MERGE's guard extracts and
-    resolves them once, and its write and the rejects read the cache.
+    The resolved documents are cached: the MERGE's write job extracts
+    and resolves them once, and the rejects read the cache.
     """
     ipphist = wh.read("DWH_PATIENT_IPPHIST", DWH_PATIENT_IPPHIST)
     resolved = resolve_patients(files, ipphist).cache()
@@ -257,8 +257,13 @@ def run_document_batch(
         bk = ["PATIENT_NUM", "ID_DOC_SOURCE"]
         if wh.exists("DWH_DOCUMENT"):
             existing = wh.read("DWH_DOCUMENT", DWH_DOCUMENT)
-            start = existing.agg(F.max("DOCUMENT_NUM")).first()[0] or 0
             known = existing.select(*bk, F.col("DOCUMENT_NUM").alias("__keep_num"))
+            # the numbering base is a one-row aggregate joined into the
+            # plan, not a separate action whose result would be inlined
+            # as a literal (new generated code every tick)
+            base = existing.agg(
+                F.coalesce(F.max("DOCUMENT_NUM"), F.lit(0)).alias("__base")
+            )
             # one left join, so the batch is planned (and read from the
             # cache) once: known keys keep their number, and the fresh
             # rows, ordered first, number on from the max in key order.
@@ -269,10 +274,11 @@ def run_document_batch(
             docs = (
                 docs.drop("DOCUMENT_NUM")
                 .join(known, bk, "left")
+                .crossJoin(base)
                 .withColumn(
                     "DOCUMENT_NUM",
                     F.coalesce(
-                        "__keep_num", F.row_number().over(fresh_first) + F.lit(start)
+                        "__keep_num", F.row_number().over(fresh_first) + F.col("__base")
                     ).cast("long"),
                 )
                 .select(*[f.name for f in DWH_DOCUMENT.fields])

@@ -69,6 +69,16 @@ def get_spark(
             "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
             str(64 * 1024 * 1024),
         )
+        # Spark's generated-code cache (LRU, 100 classes by default)
+        # must hold a polling loop's whole working set, or every tick
+        # recompiles it. Measured on the CDW daemon (seed 7, steady
+        # ticks): a document tick compiles 61 classes, a registry tick
+        # 54, about 115 distinct together, so at 100 each tick evicted
+        # the other's classes and recompiled ~60 byte-identical ones
+        # (~0.5 s of Janino per tick). A constant, not a knob: the
+        # entries are small, and 1000 covers the CDW loop and the
+        # batch plans with room to spare.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

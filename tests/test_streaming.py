@@ -396,6 +396,43 @@ def test_daemon_document_tick_replay_converges(
     assert not daemon.tick().documents_fired  # the replay committed its offsets
 
 
+def test_daemon_steady_ticks_reuse_compiled_code(spark, tmp_path):
+    """A polling daemon runs the same plans every tick, so once each
+    kind of tick has run, a later registry or document tick of the same
+    shape finds its generated classes in Spark's codegen cache and
+    compiles almost nothing. Both kinds' classes must fit in the cache
+    at once: at Spark's default size (100 classes) each tick evicted
+    what the other needed and recompiled 54-61 classes every time."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    registry = tmp_path / "export_patient.xlsx"
+    daemon = _changed_only_daemon(spark, tmp_path)
+    _drop(tmp_path, {"00230580_1.pdf": ["CR du 02/02/2002", "dr alpha"],
+                     "99999999_2.pdf": ["le 03/03/2003", "dr orphan"]})
+    daemon.tick()  # bootstrap: creates every table, quarantine included
+
+    per_tick = {"registry": [], "document": []}
+    for i in range(3):
+        # a registry revision: same rows, one city changed
+        rows = [*REG_ROWS[:2], [*REG_ROWS[2][:9], f"Lyon {i}", *REG_ROWS[2][10:]]]
+        registry.write_bytes(build_xlsx(rows))
+        os.utime(registry, ns=(10 + i, 10 + i))
+        before = compiles.getCount()
+        r = daemon.tick()
+        assert r.patients_fired and not r.documents_fired
+        per_tick["registry"].append(compiles.getCount() - before)
+
+        # a drop: one matched document and one orphan
+        _drop(tmp_path, {f"00230580_{10 + i}.pdf": [f"le 0{i + 1}/04/2004", "dr beta"],
+                         f"99999999_{20 + i}.pdf": [f"le 0{i + 1}/05/2005", "dr orphan"]})
+        before = compiles.getCount()
+        r = daemon.tick()
+        assert r.documents_fired and r.rejects == [f"99999999_{20 + i}.pdf"]
+        per_tick["document"].append(compiles.getCount() - before)
+
+    assert daemon.wh.read("DWH_DOCUMENT").count() == 4
+    assert per_tick["registry"][-1] <= 8 and per_tick["document"][-1] <= 8, per_tick
+
+
 @pytest.mark.parametrize("builder", [tumbling_counts, sliding_counts, session_counts])
 def test_stream_windows_match_batch(spark, tmp_path, builder):
     from data_engineer_challenge_spark.schemas import TESTDATA

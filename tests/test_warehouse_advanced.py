@@ -3,6 +3,8 @@ stateful streaming operators."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from data_engineer_challenge_spark.operators.merge import ParquetWarehouse, scd2_upsert
@@ -224,12 +226,13 @@ def test_merge_raises_on_duplicate_source_keys(spark, tmp_path):
 
 
 def test_merge_evaluates_source_once(spark, tmp_path):
-    """An unpartitioned MERGE runs its source plan once: the
-    duplicate-key guard fills a cache that the write reads, so the
-    rows written are the rows checked. A row-counting UDF sees each of
-    the N source rows exactly once (twice or more would mean the guard
-    and the write each recomputed the source). A duplicate-key source
-    still raises."""
+    """An unpartitioned MERGE runs its source plan once: the source is
+    cached, and the write job — whose anti-join keys and written rows
+    both read the cache, with the duplicate-key guard riding the
+    written rows — fills it, so the rows written are the rows checked.
+    A row-counting UDF sees each of the N source rows exactly once
+    (twice or more would mean the anti-join and the written rows each
+    recomputed the source). A duplicate-key source still raises."""
     import pytest
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
@@ -254,6 +257,99 @@ def test_merge_evaluates_source_once(spark, tmp_path):
     with pytest.raises(ValueError, match="multiple rows"):
         wh.merge_upsert("flat", dup, ["k"])
     assert wh.read("flat").count() == 10 + n
+
+
+def _kv_table(spark, wh, layout, rows):
+    """Table ``t`` of ``(k, v)`` rows, unpartitioned or in the
+    pruned-MERGE layout."""
+    df = spark.createDataFrame(rows, "k long, v long")
+    if layout == "flat":
+        wh.overwrite("t", df)
+    else:
+        wh.overwrite_partitioned("t", df, ["k"], n_buckets=4)
+
+
+def _leftovers(wh):
+    import os
+
+    return sorted(
+        e for e in os.listdir(wh.root)
+        if ".staging-" in e or e.endswith(".old")
+    ) + sorted(e for e in os.listdir(wh.path("t")) if e.startswith(".old-"))
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+@pytest.mark.parametrize(
+    "dup_rows,named",
+    [
+        ([(1, 10), (1, 11), (2, 20)], "{'k': 1}"),
+        ([(None, 10), (None, 11), (2, 20)], "{'k': None}"),
+    ],
+    ids=["key", "null_key"],
+)
+def test_merge_duplicate_key_fails_cleanly(spark, tmp_path, layout, dup_rows, named):
+    """A source with two rows for one key — two null keys included,
+    since grouping puts nulls together — raises a ValueError naming
+    the key, leaves the table's rows as they were, and leaves no
+    staging or ``.old`` directory behind. On the unpartitioned path
+    the guard fails the write job itself."""
+    import re
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    rows = [(i, i) for i in range(10)] + [(None, -1)]
+    _kv_table(spark, wh, layout, rows)
+    dup = spark.createDataFrame(dup_rows, "k long, v long")
+    with pytest.raises(ValueError, match="multiple rows for key " + re.escape(named)):
+        wh.merge_upsert("t", dup, ["k"])
+    nulls_first = lambda r: (r[0] is not None, r[0] or 0)
+    assert sorted(map(tuple, wh.read("t").collect()), key=nulls_first) == sorted(rows, key=nulls_first)
+    assert _leftovers(wh) == []
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_merge_null_key_never_matches(spark, tmp_path, layout):
+    """A null-key source row does not replace a null-key target row —
+    the anti-join never matches null — so both survive, next to the
+    ordinary update."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    _kv_table(spark, wh, layout, [(1, 1), (None, 2)])
+    src = spark.createDataFrame([(1, 10), (None, 20)], "k long, v long")
+    wh.merge_upsert("t", src, ["k"])
+    got = sorted(wh.read("t").collect(), key=lambda r: (r["k"] is not None, r["v"]))
+    assert [tuple(r) for r in got] == [(None, 2), (None, 20), (1, 10)]
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_merge_into_table_without_recorded_schema(spark, tmp_path, layout):
+    """Every swap records the table schema in the sidecar, and reads
+    and merges use it instead of inferring it. A table written before
+    schemas were recorded has no ``schema`` entry: it still reads and
+    merges (by inference), and the merge records the schema."""
+    import json
+    import os
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    _kv_table(spark, wh, layout, [(i, i) for i in range(10)])
+    wide = spark.createDataFrame([(5, 5, 5)], "k long, v long, w long")
+    # the whole recorded schema is read: a source whose columns differ
+    # from the table's is still refused
+    with pytest.raises(AnalysisException):
+        wh.merge_upsert("t", wide, ["k"])
+    sidecar = os.path.join(wh.path("t"), "_wh_meta.json")
+    meta = json.load(open(sidecar))
+    assert [f["name"] for f in meta.pop("schema")["fields"]][:2] == ["k", "v"]
+    if meta:
+        with open(sidecar, "w") as fh:
+            json.dump(meta, fh)
+    else:
+        os.remove(sidecar)
+
+    wh.merge_upsert("t", spark.createDataFrame([(3, 30), (42, 420)], "k long, v long"), ["k"])
+    got = {r["k"]: r["v"] for r in wh.read("t").collect()}
+    assert len(got) == 11 and got[3] == 30 and got[42] == 420 and got[9] == 9
+    assert ("schema" in wh._meta("t")) == (layout == "flat")  # a swap re-records it
+    with pytest.raises(AnalysisException):
+        wh.merge_upsert("t", wide, ["k"])
 
 
 def test_merge_into_empty_partitioned_table(spark, tmp_path):
