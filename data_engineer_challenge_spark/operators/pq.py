@@ -38,8 +38,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from .similarity import _lit_vec, dot
+from .similarity import _let, _lit_array, dot
 
 #: default geometry for the 64-dim synthetic embeddings: 8 subspaces
 #: × 8 dims, 16 codewords each → 4-bit codes, 8 bytes/vector
@@ -74,19 +75,32 @@ def pq_argmin(sub_col: Column, codewords: list[list[float]]) -> Column:
     |x|² term is constant across k and folds away, so each codeword
     costs one dot product. Ties break to the lowest code via struct
     ordering (the SQL mirror orders ``d ASC, k ASC``). No zero-norm
-    hazard: L2 needs no normalization (unlike the cosine argmax)."""
-    scored = F.array(
-        *[
-            F.struct(
-                (
-                    F.lit(_py_norm2(cw)) - 2.0 * dot(sub_col, _lit_vec(cw))
-                ).alias("d"),
-                F.lit(k).alias("k"),
-            )
-            for k, cw in enumerate(codewords)
-        ]
+    hazard: L2 needs no normalization (unlike the cosine argmax).
+    The codewords score through one transform over a literal matrix
+    (nearest_centroid's form: same doubles, a fixed handful of Py4J
+    calls to build)."""
+    return _argmin_over(
+        sub_col,
+        _lit_array(codewords),
+        _lit_array([_py_norm2(cw) for cw in codewords]),
     )
-    return F.array_min(scored)["k"]
+
+
+def _argmin_over(x: Column, cb: Column, n2: Column) -> Column:
+    """:func:`pq_argmin` over codeword rows ``cb`` (``array<array<
+    double>>``) with their squared norms ``n2``, both columns."""
+
+    def argmin(xv: Column) -> Column:
+        scored = F.transform(
+            cb,
+            lambda cw, k: F.struct(
+                (F.get(n2, k) - 2.0 * dot(xv, cw)).alias("d"),
+                k.alias("k"),
+            ),
+        )
+        return F.array_min(scored)["k"]
+
+    return _let(x, argmin)
 
 
 def residual_vec(
@@ -102,8 +116,7 @@ def residual_vec(
     Element-wise float64 subtract of a literal row picked by the cell
     id — identical doubles to the numpy form (test-pinned)."""
     cent = F.element_at(
-        F.array(*[_lit_vec(c) for c in centroids]),
-        (F.col(cell_col) + 1).cast("int"),
+        _lit_array(centroids), (F.col(cell_col) + 1).cast("int")
     )
     return F.zip_with(
         vec, cent, lambda a, b: a.cast("double") - b
@@ -145,7 +158,8 @@ def adc_luts(
     out = []
     for s, cb in enumerate(codebooks):
         qs = subvector(query_vec, s, sub_dim)
-        out.append(F.array(*[dot(qs, _lit_vec(cw)) for cw in cb]))
+        cws = _lit_array(cb)
+        out.append(_let(qs, lambda q: F.transform(cws, lambda cw: dot(q, cw))))
     return out
 
 
@@ -411,31 +425,31 @@ def adc_score_cross_vectorized(
     )
 
 
-def _pq_cell_means(df: DataFrame, cell_col: str, vec: str) -> DataFrame:
-    """Component-wise mean per cell with EXACT-DECIMAL sums (the
-    logreg trainer's accumulation-order-proof discipline — a plain
-    float avg would drift low bits with partitioning and break the
+def _pq_cell_means(df: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """Component-wise mean per ``keys`` group (a cell) with EXACT-DECIMAL
+    sums (the logreg trainer's accumulation-order-proof discipline — a
+    plain float avg would drift low bits with partitioning and break the
     frozen-codebook provenance), rounded to float32 like the stored
     literals."""
     return (
         df.select(
-            F.col(cell_col),
+            *keys,
             F.posexplode(F.col(vec)).alias("pos", "val"),
         )
-        .groupBy(cell_col, "pos")
+        .groupBy(*keys, "pos")
         .agg(
             (
                 F.sum(F.col("val").cast(_DEC)) / F.count(F.lit(1))
             ).cast("double").alias("mval")
         )
-        .groupBy(cell_col)
+        .groupBy(*keys)
         .agg(
             F.array_sort(
                 F.collect_list(F.struct("pos", "mval"))
             ).alias("pairs")
         )
         .select(
-            cell_col,
+            *keys,
             F.transform(
                 F.col("pairs"), lambda p: p["mval"].cast("float")
             ).alias("centroid"),
@@ -464,35 +478,79 @@ def train_pq_codebooks(
     if dim % m:
         raise ValueError(f"train_pq_codebooks: dim {dim} not divisible by m={m}")
     sub_dim = dim // m
-    out: list[list[list[float]]] = []
-    for s in range(m):
-        base = df.select(
-            F.col(id_col).alias("__id"),
-            subvector(F.col(vec), s, sub_dim).alias("__v"),
-        ).cache()
-        try:
-            init = (
-                base.withColumn(
-                    "__h", F.xxhash64(F.lit(seed * 1000 + s), "__id")
-                )
-                .orderBy("__h")
-                .limit(ksub)
-                .select("__v")
-                .collect()
+    # all m subspaces train together, one Spark job per Lloyd step:
+    # each row explodes into its m (subspace, subvector) rows, and the
+    # init ranks and cell means group by subspace. Every group sees the
+    # rows a per-subspace loop would, and the decimal sums are exact,
+    # so the codebooks are the same bits at 1/m of the jobs.
+    base = df.select(
+        F.col(id_col).alias("__id"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(s).alias("__s"),
+                        subvector(F.col(vec), s, sub_dim).alias("__v"),
+                    )
+                    for s in range(m)
+                ]
             )
-            cb = [[float(x) for x in r["__v"]] for r in init]
-            for _ in range(iters):
-                assigned = base.withColumn(
-                    "__cell", pq_argmin(F.col("__v"), cb)
-                )
-                means = _pq_cell_means(assigned, "__cell", "__v").collect()
-                new = {
-                    r["__cell"]: [float(x) for x in r["centroid"]]
-                    for r in means
-                }
-                # empty cells keep their previous codeword
-                cb = [new.get(k, c) for k, c in enumerate(cb)]
-            out.append(cb)
-        finally:
-            base.unpersist()
-    return out
+        ).alias("__sv"),
+    ).select("__id", "__sv.__s", "__sv.__v").cache()
+
+    def per_subspace(col_of) -> Column:
+        """``col_of(s)`` on the rows of subspace ``s``."""
+        out = F.when(F.col("__s") == 0, col_of(0))
+        for s in range(1, m):
+            out = out.when(F.col("__s") == s, col_of(s))
+        return out
+
+    try:
+        init = (
+            base.withColumn(
+                "__h",
+                per_subspace(
+                    lambda s: F.xxhash64(F.lit(seed * 1000 + s), "__id")
+                ),
+            )
+            .withColumn(
+                "__rn",
+                F.row_number().over(
+                    Window.partitionBy("__s").orderBy("__h", "__id")
+                ),
+            )
+            .filter(F.col("__rn") <= ksub)
+            .select("__s", "__rn", "__v")
+            .collect()
+        )
+        cbs: list[list[list[float]]] = [[] for _ in range(m)]
+        for r in sorted(init, key=lambda r: (r["__s"], r["__rn"])):
+            cbs[r["__s"]].append([float(x) for x in r["__v"]])
+        for _ in range(iters):
+            # the subspace's codebook is picked per row from one
+            # literal, so the argmin builds once per step, not m times
+            assigned = base.withColumn(
+                "__cell",
+                _argmin_over(
+                    F.col("__v"),
+                    F.get(_lit_array(cbs), F.col("__s")),
+                    F.get(
+                        _lit_array([[_py_norm2(c) for c in cb] for cb in cbs]),
+                        F.col("__s"),
+                    ),
+                ),
+            )
+            new = {
+                (r["__s"], r["__cell"]): [float(x) for x in r["centroid"]]
+                for r in _pq_cell_means(
+                    assigned, ["__s", "__cell"], "__v"
+                ).collect()
+            }
+            # empty cells keep their previous codeword
+            cbs = [
+                [new.get((s, k), c) for k, c in enumerate(cb)]
+                for s, cb in enumerate(cbs)
+            ]
+    finally:
+        base.unpersist()
+    return cbs

@@ -11,6 +11,8 @@ cross product never materializes.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..localrel import local_rows_df
@@ -109,8 +111,39 @@ def neardup_pairs_blocked(
 ARROW_ASSIGN_MIN_K = 48
 
 
-def _lit_vec(values: list[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
+def _sql_double(v: float) -> str:
+    """``v`` as a Spark SQL double literal that parses back to the same
+    bits (``repr`` is the shortest round-tripping decimal)."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
+def _sql_array(values: list) -> str:
+    """Spark SQL text of a (nested) list of floats."""
+    return "array(%s)" % ", ".join(
+        _sql_array(v) if isinstance(v, (list, tuple)) else _sql_double(v)
+        for v in values
+    )
+
+
+def _lit_array(values: list) -> Column:
+    """``array<double>`` literal, or ``array<array<double>>`` and deeper
+    for nested lists. Built as ONE parsed SQL expression:
+    ``F.array(*[F.lit(v) ...])`` costs a Py4J round-trip per element,
+    and the literal-heavy assignment/encode expressions spent most of
+    their driver time there (same Catalyst array of double literals)."""
+    return F.expr(_sql_array(values))
+
+
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row, however
+    often ``body`` reads it (a lambda body re-evaluates outer columns
+    on every call)."""
+    return F.transform(F.array(value), body)[0]
 
 
 def _refuse_zero_norm_centroids(
@@ -176,21 +209,25 @@ def nearest_centroid(
 
     _refuse_zero_norm_centroids(centroids, "nearest_centroid")
 
-    scored = F.array(
-        *[
-            F.struct(
-                (
-                    -(
-                        dot(vec_col, _lit_vec(c))
-                        / F.sqrt(n2v * F.lit(_py_norm2(c)))
-                    )
-                ).alias("d"),
-                F.lit(i).alias("cid"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.array_min(scored)["cid"]
+    # one struct per centroid, scored by a transform over the literal
+    # centroid matrix: the same doubles as one inlined struct per
+    # centroid, at a fixed handful of Py4J calls instead of ~k·dim
+    cents = _lit_array(centroids)
+    cn2 = _lit_array([_py_norm2(c) for c in centroids])
+
+    def argmax(r: Column) -> Column:
+        scored = F.transform(
+            cents,
+            lambda c, i: F.struct(
+                (-(dot(r["v"], c) / F.sqrt(r["n2"] * F.get(cn2, i)))).alias(
+                    "d"
+                ),
+                i.alias("cid"),
+            ),
+        )
+        return F.array_min(scored)["cid"]
+
+    return _let(F.struct(vec_col.alias("v"), n2v.alias("n2")), argmax)
 
 
 def kmeans_centroids(

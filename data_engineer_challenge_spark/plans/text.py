@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.cleaning import WS_CLASS as _WS  # \s diverges Java/RE2
 from ..functions.tokenize import TOKEN_RE, word_tokens as tokens
 from ..localrel import local_rows_df
+from ..operators.similarity import _lit_array
 from ..operators.text_dedup import _CACHED_FRAMES
 from ..parallelism import spread
 from ..tables import load_table
@@ -994,7 +995,8 @@ def _qc_wt(b_col: Column | str = "b") -> Column:
     from .quality_weights import WEIGHTS as _w
 
     b = F.col(b_col) if isinstance(b_col, str) else b_col
-    wts = F.array(*[F.lit(float(w)) for w in _w])
+    # one parsed literal, not a Py4J call per weight (~0.1 s per call)
+    wts = _lit_array(_w)
     return F.element_at(wts, b.cast("int") + F.lit(1))
 
 

@@ -19,14 +19,16 @@ def spark():
 
     from data_engineer_challenge_spark.session import get_spark
 
-    # r15 (VERDICT r14 #3: one pytest invocation must fit the driver's
-    # verify window): the suite session ran local[4] — a two-shard-era
-    # setting — while the box has 32 cores and the driver runs ONE
-    # invocation. local[10] cuts the compute-bound tier (PQ/IVF
-    # kernels, provenance trainers, oracle replays); scheduling-bound
-    # tests are unaffected. Override with SPARK_GRAFT_TEST_CPUS for
-    # manual multi-shard runs.
-    cpus = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "10"))
+    # One session for the whole suite, at most 10 task slots
+    # (compute-bound tests: PQ/IVF kernels, provenance trainers, oracle
+    # replays) and never more than the machine's cores: on a 4-core
+    # machine, local[10] ran ten Python workers on four cores, and four
+    # PQ/IVF/plan tests took 366 s against 311 s at local[4].
+    # SPARK_GRAFT_TEST_CPUS overrides it.
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_TEST_CPUS")
+        or min(10, len(os.sched_getaffinity(0)))
+    )
     spark = get_spark(
         app_name="tests",
         master=f"local[{cpus}]",

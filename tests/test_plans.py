@@ -13,9 +13,17 @@ from .conftest import SF_SMOKE
 plans._load()
 
 
+#: executed plan of each registered query, built once per module: the
+#: registry-wide checks below each read every query's plan, and
+#: building them all takes about a minute
+_PLANS: dict[str, str] = {}
+
+
 def _plan(spark, name: str) -> str:
-    df = plans.REGISTRY[name].builder(spark, SF_SMOKE)
-    return df._jdf.queryExecution().executedPlan().toString()
+    if name not in _PLANS:
+        df = plans.REGISTRY[name].builder(spark, SF_SMOKE)
+        _PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
+    return _PLANS[name]
 
 
 def _formatted(spark, name: str) -> str:
@@ -100,17 +108,14 @@ def test_partitioned_windows_everywhere(spark):
         "docs_token_budget_selection",
     }
     # self-check the detector on the known-global-window query
-    sample = plans.REGISTRY["nation_dense_ids"].builder(spark, SF_SMOKE)
     assert unpartitioned_windows(
-        sample._jdf.queryExecution().executedPlan().toString()
+        _plan(spark, "nation_dense_ids")
     ), "detector failed to flag the known unpartitioned window"
 
     for name in plans.REGISTRY:
         if name in allowed_global_window:
             continue
-        df = plans.REGISTRY[name].builder(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        bad = unpartitioned_windows(plan)
+        bad = unpartitioned_windows(_plan(spark, name))
         assert not bad, f"{name} contains an unpartitioned window: {bad[:1]}"
 
 
@@ -1285,6 +1290,7 @@ def test_split_modules_import_directly():
             ],
             capture_output=True,
             text=True,
+            timeout=300,
         )
         assert r.returncode == 0, (mod, r.stderr[-500:])
 

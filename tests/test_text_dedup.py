@@ -13,6 +13,8 @@ from data_engineer_challenge_spark.operators.text_dedup import (
     simhash64,
 )
 
+from .conftest import REPO_ROOT
+
 BASE = (
     "spark query engine shuffles data between executors during wide "
     "transformations and the optimizer prunes columns at the parquet scan "
@@ -2974,7 +2976,7 @@ print("RESULT " + json.dumps(out))
         [_sys.executable, "-c", reader, _json.dumps(snaps)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -3635,7 +3637,8 @@ def test_serve_query_cli_sparkless(spark, tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
+        timeout=300,
         env={
             **__import__("os").environ,
             # a JVM accidentally started in the serving process would
@@ -3869,7 +3872,8 @@ def test_serve_query_cli_text_mode_sparkless(spark, tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
+        timeout=300,
         env={
             **__import__("os").environ,
             "SPARK_LOCAL_IP": "127.0.0.1",
@@ -4048,7 +4052,8 @@ def test_serve_query_cli_dedup_mode_sparkless(spark, tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
+        timeout=300,
         env={**__import__("os").environ, "SPARK_LOCAL_IP": "127.0.0.1"},
     )
     assert r.returncode == 0, r.stderr[-800:]
@@ -4145,7 +4150,7 @@ def test_serve_query_cli_passage_mode_sparkless(spark, tmp_path):
             sys.executable, "tools/serve_query.py",
             "--store", store, "--cut-text", f"@{tf}",
         ],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
         env={**__import__("os").environ, "SPARK_LOCAL_IP": "127.0.0.1"},
     )
     assert r.returncode == 0, r.stderr[-800:]
