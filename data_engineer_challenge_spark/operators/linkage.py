@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -40,10 +40,3 @@ def linkage_candidates(
         .select(*block_cols, "id_a", "id_b", "name_a", "name_b",
                 "edit_distance", "soundex_match")
     )
-
-
-def normalized_name(col: Column | str) -> Column:
-    """Case/whitespace-insensitive name key (the cheap pre-linkage
-    normalization the reference's exact dedup implicitly relied on)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.upper(F.trim(F.regexp_replace(c, r"\s+", " ")))

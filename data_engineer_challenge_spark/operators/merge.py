@@ -416,100 +416,3 @@ class ParquetWarehouse:
         os.rename(staging, final)  # the new one is in place
         if os.path.isdir(old):
             shutil.rmtree(old)
-
-
-def scd2_upsert(
-    wh: ParquetWarehouse,
-    table: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    compare_cols: Sequence[str],
-    batch_id: int,
-) -> None:
-    """Slowly-changing-dimension type-2 upsert: instead of overwriting
-    (the reference's UPDATE loop loses history, exo_1.py:134-155), each
-    change closes the current row and appends a new version.
-
-    Table gains: __version (per-key ordinal), __valid_from_batch,
-    __valid_to_batch (null = current), __is_current.
-
-    One pass: join current rows to the source on the key; unchanged
-    rows stay; changed rows are closed (valid_to = batch) and a new
-    version appends; brand-new keys start at version 1.
-
-    Scale contract: each batch rewrites the FULL history table —
-    right for the dimension-sized tables SCD2 exists for (patients,
-    products), wrong for a fact table; facts belong in
-    :meth:`ParquetWarehouse.merge_upsert`'s partition-pruned path.
-    """
-    from pyspark.sql import functions as F
-
-    src = source.select(*keys, *compare_cols).dropDuplicates(list(keys))
-
-    if not wh.exists(table):
-        initial = (
-            src.withColumn("__version", F.lit(1).cast("int"))
-            .withColumn("__valid_from_batch", F.lit(batch_id).cast("long"))
-            .withColumn("__valid_to_batch", F.lit(None).cast("long"))
-            .withColumn("__is_current", F.lit(True))
-        )
-        wh.overwrite(table, initial)
-        return
-
-    target = wh.read(table)
-    history = target.filter(~F.col("__is_current"))
-    current = target.filter(F.col("__is_current"))
-
-    cmp_src = src.select(
-        *[F.col(k) for k in keys],
-        F.struct(*[F.col(c) for c in compare_cols]).alias("__new_vals"),
-    )
-    joined = current.join(cmp_src, on=list(keys), how="full_outer")
-    old_vals = F.struct(*[F.col(c) for c in compare_cols])
-
-    # eqNullSafe: plain struct == yields NULL when a field is null on
-    # either side, which would silently drop the row from every branch
-    unchanged = joined.filter(
-        F.col("__new_vals").isNotNull()
-        & F.col("__version").isNotNull()
-        & old_vals.eqNullSafe(F.col("__new_vals"))
-    ).select(*target.columns)
-
-    # rows whose key vanished from the source stay current (the CDW
-    # feed is a full snapshot but absence != deletion, SURVEY §2.7)
-    vanished = joined.filter(F.col("__new_vals").isNull()).select(*target.columns)
-
-    changed = joined.filter(
-        F.col("__new_vals").isNotNull()
-        & F.col("__version").isNotNull()
-        & ~old_vals.eqNullSafe(F.col("__new_vals"))
-    )
-    closed = changed.select(
-        *[F.col(c) for c in target.columns if c != "__valid_to_batch" and c != "__is_current"],
-        F.lit(batch_id).cast("long").alias("__valid_to_batch"),
-        F.lit(False).alias("__is_current"),
-    ).select(*target.columns)
-    reopened = changed.select(
-        *[F.col(k) for k in keys],
-        *[F.col("__new_vals").getField(c).alias(c) for c in compare_cols],
-        (F.col("__version") + 1).cast("int").alias("__version"),
-        F.lit(batch_id).cast("long").alias("__valid_from_batch"),
-        F.lit(None).cast("long").alias("__valid_to_batch"),
-        F.lit(True).alias("__is_current"),
-    ).select(*target.columns)
-
-    brand_new = joined.filter(
-        F.col("__new_vals").isNotNull() & F.col("__version").isNull()
-    ).select(
-        *[F.col(k) for k in keys],
-        *[F.col("__new_vals").getField(c).alias(c) for c in compare_cols],
-        F.lit(1).cast("int").alias("__version"),
-        F.lit(batch_id).cast("long").alias("__valid_from_batch"),
-        F.lit(None).cast("long").alias("__valid_to_batch"),
-        F.lit(True).alias("__is_current"),
-    ).select(*target.columns)
-
-    result = history.unionByName(unchanged).unionByName(vanished).unionByName(
-        closed
-    ).unionByName(reopened).unionByName(brand_new)
-    wh.overwrite(table, result)

@@ -497,44 +497,13 @@ _LCG_A, _LCG_C, _LCG_M = 1103515245, 12345, 2147483648
 _SEED_STRIDE = 1000003
 
 
-def _lcg_component(s: Column) -> Column:
-    """Deterministic pseudo-random hyperplane component in
-    [-1000, 1000] from a double-round LCG over the seed index. Pure
-    positive-int64 arithmetic (no overflow at any reachable seed), so
-    any SQL engine reproduces it bit-exactly — this is what lets the
-    LSH pipeline carry a DuckDB oracle."""
-    a = F.lit(_LCG_A).cast("long")  # force int64 arithmetic: the raw
-    c = F.lit(_LCG_C).cast("long")  # int literals would multiply in
-    m = F.lit(_LCG_M).cast("long")  # int32 and overflow under ANSI
-    h1 = (a * s.cast("long") + c) % m
-    h2 = (a * h1 + c) % m
-    return h2 % F.lit(2001).cast("long") - F.lit(1000).cast("long")
-
-
-def _plane_projection(vec: Column, plane_seed: int) -> Column:
-    """Integer-exact dot product with a deterministic pseudo-random
-    hyperplane: vector components quantize to ``floor(x · 2²⁰)`` (exact
-    — the scale is a power of two) and the plane components are LCG
-    integers, so the projection is an int64 sum — order-independent,
-    no float-accumulation drift between engines or retries."""
-    s0 = plane_seed * _SEED_STRIDE
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            F.sequence(F.lit(s0), F.lit(s0) + F.size(vec) - 1),
-            lambda x, s: F.floor(x.cast("double") * F.lit(_Q)).cast("long")
-            * _lcg_component(s),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def _plane_matrix(n_planes_total: int, dim: int):
-    """(n_planes_total × dim) int64 hyperplane component matrix — the
-    same double-round LCG stream :func:`_lcg_component` evaluates
-    column-wise, materialized once for the vectorized path. All values
-    fit int64 with headroom (bounds in the constants above)."""
+    """(n_planes_total × dim) int64 hyperplane component matrix: a
+    double-round LCG over the seed index, components in [-1000, 1000].
+    Pure positive-int64 arithmetic, so any SQL engine reproduces it
+    bit-exactly (``_lcg_sql`` in plans/similarity.py, the DuckDB
+    oracle's copy). All values fit int64 with headroom (bounds in the
+    constants above)."""
     import numpy as np
 
     seeds = (
@@ -559,63 +528,6 @@ def _assign_buckets(mat, planes_matrix, n_tables: int, n_planes: int):
     bits = (proj >= 0).astype(np.int64).reshape(-1, n_tables, n_planes)
     weights = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
     return bits @ weights
-
-
-def lsh_buckets_vectorized(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    n_tables: int = 8,
-    n_planes: int = 6,
-) -> DataFrame:
-    """(id, table, bucket) assignments for all LSH tables in one Arrow
-    pass: quantize each batch to int64 and compute every projection as
-    one (batch × dim) @ (dim × planes) integer matmul. Bit-identical to
-    the :func:`_plane_projection` expression form (same quantization,
-    same LCG planes, pure int64 — proven by the DuckDB oracle on
-    emb_lsh_neardup_pairs), but vectorized: the interpreted
-    higher-order-function fold dominated the runtime (measured ~7 s for
-    2000×48 projections at sf0.1; this path is ~50 ms)."""
-    import numpy as np
-    import pandas as pd
-
-    total = n_tables * n_planes
-
-    def assign(batches):
-        planes = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf[vec]), dtype=np.float64)
-            dim = mat.shape[1]
-            if dim not in planes:
-                planes[dim] = _plane_matrix(total, dim)
-            buckets = _assign_buckets(mat, planes[dim], n_tables, n_planes)
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "__id": np.repeat(ids, n_tables),
-                    "__table": np.tile(np.arange(n_tables), len(ids)),
-                    "__bucket": buckets.reshape(-1),
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col), F.col(vec)).mapInPandas(
-        assign, schema="__id long, __table int, __bucket long"
-    )
-
-
-def hyperplane_lsh_buckets(
-    df: DataFrame, n_planes: int = 8, id_col: str = "vec_id", vec: str = "embedding"
-) -> DataFrame:
-    """Single-table random-hyperplane LSH: sign pattern of ``n_planes``
-    hyperplanes → integer bucket (a shard/partition key)."""
-    sign_bits = []
-    for p in range(n_planes):
-        proj = _plane_projection(F.col(vec), p)
-        sign_bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * (2**p))
-    bucket = sum(sign_bits[1:], sign_bits[0])
-    return df.withColumn("lsh_bucket", bucket.cast("long"))
 
 
 def lsh_neardup_pairs(
@@ -667,10 +579,8 @@ def lsh_neardup_pairs(
     )  # spread the projection math — the input is often one file = one task
 
     def assign(batches):
-        # same bucket math as lsh_buckets_vectorized (shared
-        # _assign_buckets), but the vector rides along so the bucket
-        # group can verify without joining payloads onto candidate
-        # pairs
+        # the vector rides along with its buckets, so the bucket group
+        # can verify without joining payloads onto candidate pairs
         planes = {}
         for pdf in batches:
             if not len(pdf):

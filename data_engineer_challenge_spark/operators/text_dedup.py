@@ -51,26 +51,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
 
 
-def minhash_signature(shingle_hashes: Column, num_hashes: int = 32) -> Column:
-    """num_hashes-wide minhash signature over pre-hashed shingles: min
-    over shingles of xxhash64(seed_j, h). Re-hashing a fixed-width long
-    per slot is ~2x cheaper than re-hashing the shingle string
-    num_hashes times (measured at sf0.1). Null-free input required;
-    empty shingle sets get a signature of nulls (callers filter them
-    first).
-
-    Expression form, kept for the single-signature API; the pair
-    pipeline uses :func:`minhash_bands_vectorized` (same math family,
-    Arrow-vectorized — higher-order-function expressions evaluate
-    interpreted, which dominated the pipeline's runtime)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_hashes, lambda h: F.xxhash64(F.lit(j), h)))
-            for j in range(num_hashes)
-        ]
-    )
-
-
 #: affine minhash family parameters: positive 31-bit masked base hash,
 #: per-slot (a_j, b_j) from a double-round LCG, modulus 2^31
 _MH_A, _MH_C, _MH_M = 1103515245, 12345, 1 << 31

@@ -15,7 +15,7 @@ Differences from the reference, all deliberate (SURVEY §2.2/§2.5):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -41,20 +41,6 @@ PATIENT_DEDUP_KEYS = ["NOM", "PRENOM", "DATE_NAISSANCE", "ADRESSE", "TEL"]
 def _null_str():
     # built lazily: constructing a Column requires an active SparkContext
     return F.lit(None).cast("string")
-
-
-def shape_patients(registry: DataFrame, upload_id: int) -> tuple[DataFrame, DataFrame]:
-    """Registry rows (+ ``__row_idx``) → (DWH_PATIENT, DWH_PATIENT_IPPHIST)
-    for a FIRST load: dedup then dense 1..N numbering.
-
-    Incremental loads must keep prior numbers — use
-    :func:`run_patient_batch`, which routes existing patients through
-    the stable-identity join before projecting with
-    :func:`_project_patient_tables`.
-    """
-    deduped = keep_first_dedup(registry, PATIENT_DEDUP_KEYS, ["__row_idx"])
-    with_ids = dense_ids(deduped, "PATIENT_NUM", ["__row_idx"])
-    return _project_patient_tables(with_ids, upload_id)
 
 
 def _project_patient_tables(
@@ -172,6 +158,14 @@ def shape_documents(
     return docs, rejects
 
 
+def _numbering_base(existing: DataFrame, id_col: str) -> DataFrame:
+    """One-row ``__base`` = ``coalesce(max(id_col), 0)`` of a stored
+    table, to cross-join into the plan that numbers new rows after it.
+    Joined, not collected: a collected max is a Spark job of its own,
+    and inlined as a literal it makes new generated code every tick."""
+    return existing.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("__base"))
+
+
 # ---------------------------------------------------------------------------
 # Batch entry points (SURVEY §3 entry points 1 and 2)
 # ---------------------------------------------------------------------------
@@ -193,7 +187,6 @@ def run_patient_batch(wh: ParquetWarehouse, registry: DataFrame, upload_id: int)
     deduped = keep_first_dedup(registry, PATIENT_DEDUP_KEYS, ["__row_idx"])
     if wh.exists("DWH_PATIENT"):
         existing = wh.read("DWH_PATIENT", DWH_PATIENT)
-        start = existing.agg(F.max("PATIENT_NUM")).first()[0] or 0
         # stored demographic key, renamed to avoid column capture;
         # null-safe equality — registry fields are nullable
         known = existing.select(
@@ -216,11 +209,17 @@ def run_patient_batch(wh: ParquetWarehouse, registry: DataFrame, upload_id: int)
             .withColumn("PATIENT_NUM", F.col("__known_num"))
             .drop(*[c for c in known.columns])
         )
-        fresh = extend_ids(
-            deduped.join(known, cond, "left_anti"),
-            "PATIENT_NUM",
-            start,
-            ["__row_idx"],
+        fresh = (
+            deduped.join(known, cond, "left_anti")
+            .crossJoin(_numbering_base(existing, "PATIENT_NUM"))
+            .withColumn(
+                "PATIENT_NUM",
+                (
+                    F.row_number().over(Window.orderBy("__row_idx"))
+                    + F.col("__base")
+                ).cast("long"),
+            )
+            .drop("__base")
         )
         with_ids = kept.unionByName(fresh.select(*kept.columns))
     else:
@@ -258,12 +257,6 @@ def run_document_batch(
         if wh.exists("DWH_DOCUMENT"):
             existing = wh.read("DWH_DOCUMENT", DWH_DOCUMENT)
             known = existing.select(*bk, F.col("DOCUMENT_NUM").alias("__keep_num"))
-            # the numbering base is a one-row aggregate joined into the
-            # plan, not a separate action whose result would be inlined
-            # as a literal (new generated code every tick)
-            base = existing.agg(
-                F.coalesce(F.max("DOCUMENT_NUM"), F.lit(0)).alias("__base")
-            )
             # one left join, so the batch is planned (and read from the
             # cache) once: known keys keep their number, and the fresh
             # rows, ordered first, number on from the max in key order.
@@ -274,7 +267,7 @@ def run_document_batch(
             docs = (
                 docs.drop("DOCUMENT_NUM")
                 .join(known, bk, "left")
-                .crossJoin(base)
+                .crossJoin(_numbering_base(existing, "DOCUMENT_NUM"))
                 .withColumn(
                     "DOCUMENT_NUM",
                     F.coalesce(

@@ -34,7 +34,7 @@ from .ivf_centroids import CENTROIDS as _IVF_CENTROIDS
 #: an entry-preserving rewrite (same part names — the overwrite-in-
 #: place pattern) would serve stale centroids without the per-file
 #: component (r8 ADVICE). FIFO-capped so long sessions touching many
-#: corpora (the scale_smoke sweep) can't grow the dict unboundedly.
+#: corpora can't grow the dict unboundedly.
 _SCALED_QUANTIZERS: dict[tuple, tuple[list[list[float]], int]] = {}
 _SCALED_QUANTIZER_CAP = 32
 

@@ -395,62 +395,6 @@ def ingest_stream_distinct_sketches(
     q.awaitTermination()
 
 
-def ingest_stream_quantile_sketches(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    table,  # operators.snapshot.SnapshotTable (the sketch rollup)
-    value_col: str,
-    group_cols: list[str],
-    checkpoint_dir: str,
-    capacity: int | None = None,
-    txn_prefix: str = "qk",
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Maintain a persisted QUANTILE sketch rollup from a stream — the
-    percentile twin of ``ingest_stream_distinct_sketches``: each
-    micro-batch folds its rows into one centroid sketch per group
-    (operators/quantiles.py) and APPENDS the sketch rows; the read
-    path merges them, and merge is a pure function of the centroid
-    multiset, so the rollup is correct under any batch slicing of the
-    input rows.
-
-    Exactly-once contract — ONE wall, not two: centroid sketches are
-    additive (unlike HLL's register-max, re-absorbing the same rows
-    twice double-counts, exactly as COUNT/SUM would), so replay
-    safety rests entirely on the per-batch txn id making a redelivered
-    batch a silent no-op on the table. That is the same wall every
-    additive sink in this module leans on (ingest_stream_ivm, the
-    keyed MERGE sinks); the HLL sink's second, algebraic wall is a
-    distinct-count luxury. State: the stream carries none — the sketch
-    rows in the table are the state."""
-    from ..operators.quantiles import DEFAULT_CAPACITY, build_quantile_sketches
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        table.append(
-            build_quantile_sketches(
-                batch_df,
-                value_col,
-                group_cols,
-                capacity if capacity is not None else DEFAULT_CAPACITY,
-            ),
-            txn=f"{txn_prefix}-{batch_id}",
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def ingest_batch_passage_dedup(
     spark: SparkSession,
     batch: DataFrame,

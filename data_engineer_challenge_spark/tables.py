@@ -49,8 +49,8 @@ def _events_ts_is_nanos(path: str) -> bool:
     # that flips the timestamp unit must not reuse a stale verdict —
     # that would silently mis-scale every events timestamp by 1000x.
     # A Spark-written table is a DIRECTORY of part files sharing one
-    # schema — sniff any one part (tools/scale_smoke.py synthesizes
-    # events this way; the driver testdata ships single files)
+    # schema — sniff any one part (tables Spark writes itself look
+    # like this; the shipped testdata tables are single files)
     if os.path.isdir(path):
         parts = sorted(
             os.path.join(path, f)

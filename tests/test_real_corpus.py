@@ -70,18 +70,22 @@ def test_real_corpus_golden_metadata(spark):
         assert r["author"] == want_author, fn
 
 
-def test_real_registry_loads(spark):
-    """The real 4,828-row Excel loads with keep-first dedup to 4,826
-    patients (BASELINE.md measured values)."""
-    from data_engineer_challenge_spark.pipeline import shape_patients
+def test_real_registry_loads(spark, tmp_path):
+    """The real 4,828-row Excel loads through the registry entry point
+    with keep-first dedup to 4,826 patients (BASELINE.md measured
+    values)."""
+    from data_engineer_challenge_spark.operators.merge import ParquetWarehouse
+    from data_engineer_challenge_spark.pipeline import run_patient_batch
     from data_engineer_challenge_spark.sources.xlsx import read_patient_registry
 
     xlsx = os.path.join(REF_DIR, "export_patient.xlsx")
     registry = read_patient_registry(spark, xlsx, sheet_name="Export Worksheet")
     assert registry.count() == 4828
-    patient, ipphist = shape_patients(registry, upload_id=1)
-    n = patient.count()
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    run_patient_batch(wh, registry, upload_id=1)
+    n = wh.read("DWH_PATIENT").count()
     assert n == 4826  # two same-person re-registrations dropped (J1)
+    ipphist = wh.read("DWH_PATIENT_IPPHIST")
     assert ipphist.count() == 4826
     ids = ipphist.select("HOSPITAL_PATIENT_ID").distinct().count()
     assert ids == 4826

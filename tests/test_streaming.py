@@ -1147,97 +1147,6 @@ def test_streaming_sketch_rollup_exact_and_replay_proof(spark, tmp_path):
     assert estimates() == est
 
 
-def test_stream_quantile_sketch_rollup(spark, tmp_path):
-    """The quantile twin of the HLL sketch sink: DISJOINT micro-batches
-    append per-(group, batch) centroid sketches, the merged read-path
-    estimate equals the batch-built answer over all rows (exact
-    regime), and the txn wall makes a replayed batch id a no-op —
-    which is the ONLY wall here: centroid sketches are additive, so a
-    rogue re-append under a fresh txn id WOULD move the count (pinned
-    below, the documented contrast with HLL's algebraic idempotence)."""
-    import pyspark.sql.functions as SF
-
-    from data_engineer_challenge_spark.operators.quantiles import (
-        build_quantile_sketches,
-        quantile_estimates,
-    )
-    from data_engineer_challenge_spark.operators.snapshot import SnapshotTable
-    from data_engineer_challenge_spark.streaming.ingest import (
-        ingest_stream_quantile_sketches,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    shaped_cols = [
-        "event_type", SF.date_trunc("day", "ts").alias("day"), "value",
-    ]
-    src = str(tmp_path / "qk_src")
-    for pred in ("event_id % 2 = 0", "event_id % 2 = 1"):  # disjoint
-        ev.where(pred).select(*shaped_cols).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    tab = SnapshotTable(spark, str(tmp_path / "qk_tab"))
-    ingest_stream_quantile_sketches(
-        spark,
-        src,
-        ev.select(*shaped_cols).schema,
-        tab,
-        value_col="value",
-        group_cols=["event_type", "day"],
-        checkpoint_dir=str(tmp_path / "qk_ckpt"),
-        max_files_per_trigger=1,
-    )
-
-    def estimates():
-        return {
-            r["event_type"]: (r["n_values"], r["p50"], r["p90"])
-            for r in quantile_estimates(
-                tab.read(), ["event_type"], {"p50": 0.5, "p90": 0.9}
-            ).collect()
-        }
-
-    direct = {
-        r["event_type"]: (r["n_values"], r["p50"], r["p90"])
-        for r in quantile_estimates(
-            build_quantile_sketches(
-                ev.select(*shaped_cols), "value", ["event_type", "day"]
-            ),
-            ["event_type"],
-            {"p50": 0.5, "p90": 0.9},
-        ).collect()
-    }
-    est = estimates()
-    assert est == direct and len(est) > 0
-
-    # txn wall: replaying an ALREADY-COMMITTED batch id is a no-op
-    before = tab.current_version()
-    tab.append(
-        build_quantile_sketches(
-            ev.where("event_id % 2 = 0").select(*shaped_cols),
-            "value",
-            ["event_type", "day"],
-        ),
-        txn="qk-0",
-    )
-    assert tab.current_version() == before and estimates() == est
-
-    # and the contract boundary: a re-append under a FRESH txn id
-    # double-counts (additive sketches have no algebraic second wall)
-    tab.append(
-        build_quantile_sketches(
-            ev.where("event_id % 2 = 0").select(*shaped_cols),
-            "value",
-            ["event_type", "day"],
-        ),
-        txn="rogue-replay",
-    )
-    doubled = estimates()
-    assert any(
-        doubled[k][0] > est[k][0] for k in est
-    ), "fresh-txn re-append should have moved counts"
-
-
 def test_stream_stream_full_outer_interval_join(spark, tmp_path):
     """Full-outer reconciliation: unmatched rows surface null-extended
     from BOTH streams once the watermark proves their window closed —

@@ -1,4 +1,4 @@
-"""SCD2 history tracking, exactly-once streaming ingest, and custom
+"""Warehouse MERGE paths, exactly-once streaming ingest, and custom
 stateful streaming operators."""
 
 from __future__ import annotations
@@ -7,15 +7,11 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from data_engineer_challenge_spark.operators.merge import ParquetWarehouse, scd2_upsert
+from data_engineer_challenge_spark.operators.merge import ParquetWarehouse
 from data_engineer_challenge_spark.schemas import TESTDATA
 from data_engineer_challenge_spark.streaming.ingest import ingest_stream
 from data_engineer_challenge_spark.streaming.stateful import running_user_totals
 from data_engineer_challenge_spark.tables import load_table
-
-
-def _src(spark, rows):
-    return spark.createDataFrame(rows, "pid long, name string, city string")
 
 
 def _file_hashes(root):
@@ -406,49 +402,6 @@ def test_partitioned_merge_key_mismatch_raises(spark, tmp_path):
         wh.merge_upsert("t", base, ["other"])
     # and the layout survived the failed call
     assert wh._meta("t")["partition_keys"] == ["k"]
-
-
-def test_scd2_versioning(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    keys, cols = ["pid"], ["name", "city"]
-
-    scd2_upsert(wh, "P", _src(spark, [(1, "Anne", "Paris"), (2, "Luc", "Lyon")]), keys, cols, batch_id=1)
-    t1 = wh.read("P").collect()
-    assert len(t1) == 2 and all(r["__is_current"] and r["__version"] == 1 for r in t1)
-
-    # batch 2: Anne moves; Luc unchanged; Zoe appears
-    scd2_upsert(
-        wh, "P",
-        _src(spark, [(1, "Anne", "Nice"), (2, "Luc", "Lyon"), (3, "Zoe", "Brest")]),
-        keys, cols, batch_id=2,
-    )
-    rows = {(r["pid"], r["__version"]): r for r in wh.read("P").collect()}
-    assert len(rows) == 4
-    old = rows[(1, 1)]
-    assert not old["__is_current"] and old["__valid_to_batch"] == 2 and old["city"] == "Paris"
-    new = rows[(1, 2)]
-    assert new["__is_current"] and new["city"] == "Nice" and new["__valid_from_batch"] == 2
-    assert rows[(2, 1)]["__is_current"]  # untouched
-    assert rows[(3, 1)]["__valid_from_batch"] == 2
-
-    # batch 3: Anne's key vanishes from the snapshot → stays current
-    scd2_upsert(wh, "P", _src(spark, [(2, "Luc", "Lyon")]), keys, cols, batch_id=3)
-    rows3 = {(r["pid"], r["__version"]): r for r in wh.read("P").collect()}
-    assert rows3[(1, 2)]["__is_current"]
-    assert len(rows3) == 4
-
-    # idempotence: replaying batch 3 changes nothing
-    scd2_upsert(wh, "P", _src(spark, [(2, "Luc", "Lyon")]), keys, cols, batch_id=3)
-    assert wh.read("P").count() == 4
-
-
-def test_scd2_null_fields_not_dropped(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    scd2_upsert(wh, "P", _src(spark, [(1, "Anne", None)]), ["pid"], ["name", "city"], 1)
-    scd2_upsert(wh, "P", _src(spark, [(1, "Anne", None)]), ["pid"], ["name", "city"], 2)
-    assert wh.read("P").count() == 1  # null == null must count as unchanged
-    scd2_upsert(wh, "P", _src(spark, [(1, "Anne", "Nice")]), ["pid"], ["name", "city"], 3)
-    assert wh.read("P").count() == 2  # null -> value is a real change
 
 
 def test_exactly_once_stream_ingest(spark, tmp_path):
