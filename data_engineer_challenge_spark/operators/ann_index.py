@@ -247,12 +247,12 @@ class IVFVectorIndex:
                 json.dumps(self.opq_rotation).encode()
             ).hexdigest()
         #: suggested probe width for this quantizer (populated by
-        #: maybe_rebucket / reselect_serving / the persisted
+        #: maybe_rebucket / the persisted
         #: quantizer file; None for stores whose caller decides
         #: n_probe out of band)
         self.n_probe_hint: int | None = None
         #: suggested ADC shortlist width for coded stores (populated
-        #: by reselect_serving — r13, VERDICT r12 #3)
+        #: by a staged maybe_rebucket with a recall_target)
         self.adc_shortlist_hint: int | None = None
         # repair a crashed rebucket/compaction BEFORE the meta check
         # and before any probe can read a half-swapped inverted list
@@ -965,8 +965,7 @@ class IVFVectorIndex:
         ``budget`` bounds the lists folded PER CALL (fattest-first;
         see ``compact_partitioned``) so a uniform drop that fattens
         every list at once cannot trigger a whole-store rewrite in
-        one tick — ``vector_index_tick`` passes its per-tick budget
-        here (r13, VERDICT r12 #2)."""
+        one tick (r13, VERDICT r12 #2)."""
         import os as _os
 
         from .compaction import compact_flat, compact_partitioned
@@ -1077,9 +1076,8 @@ class IVFVectorIndex:
         """Growth-triggered quantizer retrain + full re-bucket — the
         maintenance operation ``build_scaled`` decides only ONCE
         (VERDICT r8 #2): a store built under ``IVF_AUTO_MIN_N`` that
-        grows past it via ``append`` / the ``vector_index_tick``
-        streaming path otherwise keeps its small quantizer forever,
-        and list sizes (hence probe cost) grow ∝ N/k. Fires when the
+        grows past it via ``append`` otherwise keeps its small quantizer
+        forever, and list sizes (hence probe cost) grow ∝ N/k. Fires when the
         corpus is past ``min_n`` AND the mean list holds more than
         ``growth_factor × target_list_size`` rows; retrains
         k = ⌈N/target⌉ centroids on the LIVE rows (deterministic
@@ -1525,8 +1523,7 @@ class IVFVectorIndex:
             if serving and serving.get("adc_shortlist") is not None:
                 self.adc_shortlist_hint = serving["adc_shortlist"]
             #: the plan tick's measured sweep receipt (None when the
-            #: plan ran without a recall_target) — vector_index_tick
-            #: surfaces it instead of re-running reselect_serving
+            #: plan ran without a recall_target)
             self.staged_serving = serving
             self.rebucket_phase = "swap"
             return True
@@ -1581,9 +1578,9 @@ class IVFVectorIndex:
         max_queries: int = 64,
     ) -> tuple[int, float]:
         """:meth:`select_n_probe`'s sweep, also returning the recall
-        MEASURED at the returned width on the held-out set — so
-        :meth:`reselect_serving` can persist a receipt alongside the
-        hint without re-running the sweep (r13, VERDICT r12 #3)."""
+        MEASURED at the returned width on the held-out set — so the
+        staged :meth:`maybe_rebucket` plan can persist a receipt
+        alongside the hint without re-running the sweep."""
         from .similarity import (
             brute_force_topk_vectorized,
             ivf_topk_vectorized,
@@ -1635,83 +1632,6 @@ class IVFVectorIndex:
                 n_probe *= 2
         finally:
             queries.unpersist()
-
-    @locked_writer
-    def reselect_serving(
-        self,
-        recall_target: float,
-        k: int = 10,
-        max_queries: int = 64,
-    ) -> dict:
-        """Re-measure and re-persist the store's serving widths
-        against the CURRENT quantizer and LIVE rows (r13, VERDICT
-        r12 #3): a store that grew and rebucketed kept serving its
-        build-time ``n_probe`` hint — probe answers stay exact for
-        the lists probed, but recall@k silently drifts (0.656 at the
-        end of the r12 21-tick walk). Runs the held-out recall sweep
-        (:meth:`select_n_probe`'s ladder) over the live folded rows,
-        persists the chosen ``n_probe`` into the quantizer file (the
-        hint ``open`` / ``open_local`` / tools/serve_query.py read)
-        and — for coded stores — re-runs :meth:`select_adc_width`
-        and persists ``adc_shortlist`` beside it. Returns
-        ``{"n_probe", "recall", "adc_shortlist"}`` where ``recall``
-        is the one MEASURED at the returned width.
-        ``vector_index_tick`` calls this after every rebucket;
-        cadence callers can invoke it directly — cost is one exact
-        pass + the ladder, amortized as a rare growth event."""
-        live = (
-            self._live_folded()
-            .select(F.col(self.id_col), F.col(self.vec_col))
-            .persist()
-        )
-        try:
-            n_probe, recall = self._sweep_n_probe(
-                live,
-                self.centroids,
-                recall_target,
-                k=k,
-                id_col=self.id_col,
-                vec_col=self.vec_col,
-                max_queries=max_queries,
-            )
-            adc = None
-            if self.pq_codebooks is not None:
-                adc = self.select_adc_width(
-                    live,
-                    self.pq_codebooks,
-                    recall_target,
-                    k=k,
-                    id_col=self.id_col,
-                    vec_col=self.vec_col,
-                    max_queries=max_queries,
-                    residual_centroids=(
-                        self.centroids if self.pq_residual else None
-                    ),
-                )
-        finally:
-            live.unpersist()
-        # the quantizer file's centroids are immutable (md5-keyed);
-        # the serving hints beside them are MUTABLE metadata — this
-        # rewrite is atomic and changes no probe answer, only the
-        # default widths future opens serve with
-        qf = self._quantizer_file(self.meta["centroids_md5"])
-        with open(qf) as f:
-            quant = json.load(f)
-        quant["n_probe"] = n_probe
-        if adc is not None:
-            quant["adc_shortlist"] = adc
-        tmp = qf + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(quant, f)
-        os.replace(tmp, qf)
-        self.n_probe_hint = n_probe
-        if adc is not None:
-            self.adc_shortlist_hint = adc
-        return {
-            "n_probe": n_probe,
-            "recall": recall,
-            "adc_shortlist": adc,
-        }
 
     @staticmethod
     def select_adc_width(

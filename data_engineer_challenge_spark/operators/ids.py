@@ -3,8 +3,9 @@
 The reference assigns ``PATIENT_NUM = pandas index + 1`` and
 ``DOCUMENT_NUM`` from per-run ``os.listdir`` position — IDs that shift
 whenever the input changes (the K3 upsert hazard). Here IDs are a
-deterministic function of a declared business ordering, and new rows
-extend an existing sequence instead of renumbering it.
+deterministic function of a declared business ordering; the CDW
+tables number new rows on from the stored max in the same plan
+(``pipeline._numbering_base``) instead of renumbering.
 """
 
 from __future__ import annotations
@@ -17,46 +18,14 @@ from pyspark.sql.window import Window
 
 
 def dense_ids(
-    df: DataFrame, id_col: str, order_by: Sequence[Column | str], start: int = 1
+    df: DataFrame, id_col: str, order_by: Sequence[Column | str]
 ) -> DataFrame:
     """Dense sequential IDs 1..N by an explicit total order.
 
     A global ``row_number`` funnels every row through one partition —
-    fine for dimension-sized data (patients). For billion-row tables
-    use :func:`scalable_ids`.
+    fine for dimension-sized data only.
     """
     w = Window.orderBy(*order_by)
-    return df.withColumn(id_col, (F.row_number().over(w) + (start - 1)).cast("long"))
+    return df.withColumn(id_col, F.row_number().over(w).cast("long"))
 
 
-def scalable_ids(df: DataFrame, id_col: str, start: int = 1) -> DataFrame:
-    """Dense unique IDs without a single-partition window.
-
-    Two-phase (zipWithIndex-style, DataFrame-only):
-    ``monotonically_increasing_id`` encodes ``(partition << 33) + row``;
-    per-partition counts (one tiny agg) yield cumulative offsets that
-    are broadcast-joined back. No global shuffle of the data — cost is
-    one pass + a broadcast of #partitions rows. IDs are dense and
-    unique but follow partition layout, not a business order — use
-    where order carries no meaning.
-    """
-    tagged = df.withColumn("__mid", F.monotonically_increasing_id())
-    tagged = tagged.withColumn(
-        "__pid", F.shiftright(F.col("__mid"), 33).cast("long")
-    ).withColumn("__row", F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)))
-    counts = tagged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn("__offset", F.coalesce(F.sum("__n").over(w), F.lit(0)))
-    return (
-        tagged.join(F.broadcast(offsets.select("__pid", "__offset")), "__pid")
-        .withColumn(id_col, (F.col("__offset") + F.col("__row") + start).cast("long"))
-        .drop("__mid", "__pid", "__row", "__offset")
-    )
-
-
-def extend_ids(
-    new_rows: DataFrame, id_col: str, existing_max: int, order_by: Sequence[Column | str]
-) -> DataFrame:
-    """Continue an existing ID sequence for appended rows (fixes the
-    reference's restart-at-1 DOCUMENT_NUM, exo_2.py:233)."""
-    return dense_ids(new_rows, id_col, order_by, start=existing_max + 1)

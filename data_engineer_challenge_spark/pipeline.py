@@ -32,7 +32,6 @@ from .functions import (
 )
 from .localrel import local_rows_df
 from .operators.dedup import keep_first_dedup
-from .operators.ids import dense_ids, extend_ids
 from .operators.merge import ParquetWarehouse
 from .schemas import DWH_DOCUMENT, DWH_PATIENT, DWH_PATIENT_IPPHIST
 
@@ -107,9 +106,10 @@ def resolve_patients(files: DataFrame, ipphist: DataFrame) -> DataFrame:
 
 
 def shape_documents(
-    resolved: DataFrame, upload_id: int, start_doc_num: int = 0
+    resolved: DataFrame, upload_id: int
 ) -> tuple[DataFrame, DataFrame]:
-    """:func:`resolve_patients` rows → (DWH_DOCUMENT rows, rejects).
+    """:func:`resolve_patients` rows → (DWH_DOCUMENT rows without
+    ``DOCUMENT_NUM``, rejects); :func:`run_document_batch` numbers them.
 
     Rejects = readable documents whose IPP matches no patient (a null
     ``PATIENT_NUM``) — the reference logs a warning and drops them
@@ -131,11 +131,7 @@ def shape_documents(
         matched, ["PATIENT_NUM", "ID_DOC_SOURCE"], ["filename"]
     )
 
-    numbered = extend_ids(
-        matched, "DOCUMENT_NUM", start_doc_num, ["HOSPITAL_PATIENT_ID", "ID_DOC_SOURCE"]
-    )
-    docs = numbered.select(
-        "DOCUMENT_NUM",
+    docs = matched.select(
         "PATIENT_NUM",
         _null_str().alias("ENCOUNTER_NUM"),
         _null_str().alias("TITLE"),
@@ -166,6 +162,14 @@ def _numbering_base(existing: DataFrame, id_col: str) -> DataFrame:
     return existing.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("__base"))
 
 
+def _stored(wh: ParquetWarehouse, table: str, schema) -> DataFrame:
+    """The stored table, or an empty frame of its schema before the
+    first load, so a first load numbers through the steady path."""
+    if wh.exists(table):
+        return wh.read(table, schema)
+    return local_rows_df(wh.spark, [], schema)
+
+
 # ---------------------------------------------------------------------------
 # Batch entry points (SURVEY §3 entry points 1 and 2)
 # ---------------------------------------------------------------------------
@@ -185,46 +189,42 @@ def run_patient_batch(wh: ParquetWarehouse, registry: DataFrame, upload_id: int)
     hazard, reintroduced at upsert time).
     """
     deduped = keep_first_dedup(registry, PATIENT_DEDUP_KEYS, ["__row_idx"])
-    if wh.exists("DWH_PATIENT"):
-        existing = wh.read("DWH_PATIENT", DWH_PATIENT)
-        # stored demographic key, renamed to avoid column capture;
-        # null-safe equality — registry fields are nullable
-        known = existing.select(
-            F.col("PATIENT_NUM").alias("__known_num"),
-            F.col("LASTNAME").alias("__k_nom"),
-            F.col("FIRSTNAME").alias("__k_prenom"),
-            F.col("BIRTH_DATE").alias("__k_naissance"),
-            F.col("RESIDENCE_ADDRESS").alias("__k_adresse"),
-            F.col("PHONE_NUMBER").alias("__k_tel"),
+    existing = _stored(wh, "DWH_PATIENT", DWH_PATIENT)
+    # stored demographic key, renamed to avoid column capture;
+    # null-safe equality — registry fields are nullable
+    known = existing.select(
+        F.col("PATIENT_NUM").alias("__known_num"),
+        F.col("LASTNAME").alias("__k_nom"),
+        F.col("FIRSTNAME").alias("__k_prenom"),
+        F.col("BIRTH_DATE").alias("__k_naissance"),
+        F.col("RESIDENCE_ADDRESS").alias("__k_adresse"),
+        F.col("PHONE_NUMBER").alias("__k_tel"),
+    )
+    cond = (
+        F.col("NOM").eqNullSafe(F.col("__k_nom"))
+        & F.col("PRENOM").eqNullSafe(F.col("__k_prenom"))
+        & parse_fr_date("DATE_NAISSANCE").eqNullSafe(F.col("__k_naissance"))
+        & F.col("ADRESSE").eqNullSafe(F.col("__k_adresse"))
+        & F.col("TEL").eqNullSafe(F.col("__k_tel"))
+    )
+    kept = (
+        deduped.join(known, cond, "inner")
+        .withColumn("PATIENT_NUM", F.col("__known_num"))
+        .drop(*[c for c in known.columns])
+    )
+    fresh = (
+        deduped.join(known, cond, "left_anti")
+        .crossJoin(_numbering_base(existing, "PATIENT_NUM"))
+        .withColumn(
+            "PATIENT_NUM",
+            (
+                F.row_number().over(Window.orderBy("__row_idx"))
+                + F.col("__base")
+            ).cast("long"),
         )
-        cond = (
-            F.col("NOM").eqNullSafe(F.col("__k_nom"))
-            & F.col("PRENOM").eqNullSafe(F.col("__k_prenom"))
-            & parse_fr_date("DATE_NAISSANCE").eqNullSafe(F.col("__k_naissance"))
-            & F.col("ADRESSE").eqNullSafe(F.col("__k_adresse"))
-            & F.col("TEL").eqNullSafe(F.col("__k_tel"))
-        )
-        kept = (
-            deduped.join(known, cond, "inner")
-            .withColumn("PATIENT_NUM", F.col("__known_num"))
-            .drop(*[c for c in known.columns])
-        )
-        fresh = (
-            deduped.join(known, cond, "left_anti")
-            .crossJoin(_numbering_base(existing, "PATIENT_NUM"))
-            .withColumn(
-                "PATIENT_NUM",
-                (
-                    F.row_number().over(Window.orderBy("__row_idx"))
-                    + F.col("__base")
-                ).cast("long"),
-            )
-            .drop("__base")
-        )
-        with_ids = kept.unionByName(fresh.select(*kept.columns))
-    else:
-        with_ids = dense_ids(deduped, "PATIENT_NUM", ["__row_idx"])
-    with_ids = with_ids.cache()
+        .drop("__base")
+    )
+    with_ids = kept.unionByName(fresh.select(*kept.columns)).cache()
     try:
         patient, ipphist = _project_patient_tables(with_ids, upload_id)
         wh.merge_upsert("DWH_PATIENT", patient, ["PATIENT_NUM"])
@@ -244,7 +244,7 @@ def run_document_batch(
 
     Stable numbering: rows whose (PATIENT_NUM, ID_DOC_SOURCE) already
     exist keep their DOCUMENT_NUM; genuinely new rows continue the
-    sequence from the current max.
+    sequence from the current max (0 on a first load) in key order.
 
     The resolved documents are cached: the MERGE's write job extracts
     and resolves them once, and the rejects read the cache.
@@ -254,28 +254,26 @@ def run_document_batch(
     try:
         docs, rejects = shape_documents(resolved, upload_id)
         bk = ["PATIENT_NUM", "ID_DOC_SOURCE"]
-        if wh.exists("DWH_DOCUMENT"):
-            existing = wh.read("DWH_DOCUMENT", DWH_DOCUMENT)
-            known = existing.select(*bk, F.col("DOCUMENT_NUM").alias("__keep_num"))
-            # one left join, so the batch is planned (and read from the
-            # cache) once: known keys keep their number, and the fresh
-            # rows, ordered first, number on from the max in key order.
-            # No broadcast hint: known grows with the warehouse (every
-            # document ever loaded) — let AQE pick broadcast while it is
-            # small and fall back to a shuffle join when it is not
-            fresh_first = Window.orderBy(F.col("__keep_num").isNotNull(), *bk)
-            docs = (
-                docs.drop("DOCUMENT_NUM")
-                .join(known, bk, "left")
-                .crossJoin(_numbering_base(existing, "DOCUMENT_NUM"))
-                .withColumn(
-                    "DOCUMENT_NUM",
-                    F.coalesce(
-                        "__keep_num", F.row_number().over(fresh_first) + F.col("__base")
-                    ).cast("long"),
-                )
-                .select(*[f.name for f in DWH_DOCUMENT.fields])
+        existing = _stored(wh, "DWH_DOCUMENT", DWH_DOCUMENT)
+        known = existing.select(*bk, F.col("DOCUMENT_NUM").alias("__keep_num"))
+        # one left join, so the batch is planned (and read from the
+        # cache) once: known keys keep their number, and the fresh
+        # rows, ordered first, number on from the max in key order.
+        # No broadcast hint: known grows with the warehouse (every
+        # document ever loaded) — let AQE pick broadcast while it is
+        # small and fall back to a shuffle join when it is not
+        fresh_first = Window.orderBy(F.col("__keep_num").isNotNull(), *bk)
+        docs = (
+            docs.join(known, bk, "left")
+            .crossJoin(_numbering_base(existing, "DOCUMENT_NUM"))
+            .withColumn(
+                "DOCUMENT_NUM",
+                F.coalesce(
+                    "__keep_num", F.row_number().over(fresh_first) + F.col("__base")
+                ).cast("long"),
             )
+            .select(*[f.name for f in DWH_DOCUMENT.fields])
+        )
         wh.merge_upsert("DWH_DOCUMENT", docs, bk)
         rejected = [tuple(r) for r in rejects.collect()]
     finally:

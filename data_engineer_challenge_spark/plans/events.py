@@ -127,11 +127,9 @@ def events_sliding_daily_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min) through Spark's native
-    ``session_window`` — the SAME operator the streaming twin uses
-    (streaming/windows.py session_counts), here in batch mode, so the
-    batch/stream parity claim is driver-checked, not just unit-tested.
-    The classic lag+cumsum formulation is kept as a tested equivalence
-    in tests/test_plans.py (parity on the full events table).
+    ``session_window``. The classic lag+cumsum formulation is kept as a
+    tested equivalence in tests/test_plans.py (parity on the full events
+    table).
 
     Semantics edge worth pinning (verified empirically, not assumed):
     ``session_window`` MERGES two events whose gap is exactly the

@@ -282,8 +282,7 @@ def order_status_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nation_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense sequential IDs over an explicit order (SURVEY §2.2 P8) —
-    dimension-sized input, so the single-partition window is fine; big
-    tables use operators.ids.scalable_ids instead."""
+    dimension-sized input, so the single-partition window is fine."""
     nation = load_table(spark, sf_dir, "nation").select("n_name")
     out = dense_ids(nation, "nation_id", ["n_name"])
     return out.withColumn("nation_id", F.col("nation_id").cast("long"))

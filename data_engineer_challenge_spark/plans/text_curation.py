@@ -40,7 +40,6 @@ from .text import (  # noqa: F401
     _dsir_ratio,
     _gram_features,
     exact_fingerprint,
-    quality_gram_feats,
     with_quality_score,
 )
 from .text import _GRAMS_EXPR, _GRAMS_SQL, _QC_BUCKETS  # noqa: F401

@@ -4,6 +4,8 @@
   capability Spark's file streaming source lacks (SURVEY §4.4).
 - ``daemon``: the reference's 30 s polling loop (script.py:60-131) as a
   bounded micro-batch driver over the CDW pipelines.
-- ``windows``: Structured Streaming windowed aggregations over the
-  events stream (watermark + tumbling/sliding/session).
+- ``ingest``: exactly-once ingest ticks — the foreachBatch keyed
+  upsert into a SnapshotTable, passage-deduped warehouse ingest and the
+  delta-aware curation refresh.
+- ``warc_ingest``: the WARC crawl loop over a segment directory.
 """

@@ -1,10 +1,14 @@
-"""Exactly-once streaming ingest into the warehouse
-(SURVEY.md §2.7 — the foreachBatch + MERGE pattern).
+"""Exactly-once ingest ticks (SURVEY.md §2.7).
 
-Structured Streaming's checkpoint gives at-least-once batch delivery;
-the keyed MERGE makes the sink idempotent, so replays after failure
-produce no duplicates — the standard exactly-once recipe without a
-transactional table format.
+- ``ingest_stream_snapshot_merge``: the foreachBatch + MERGE pattern
+  into a SnapshotTable (``events_stream_upsert``). Structured
+  Streaming's checkpoint gives at-least-once batch delivery; the keyed,
+  txn-guarded MERGE makes the sink idempotent, so replays after failure
+  produce no duplicates.
+- ``ingest_batch_passage_dedup``: one passage-deduped warehouse ingest
+  (the WARC loop, ``streaming/warc_ingest.py``).
+- ``curation_refresh_delta_tick`` / ``curation_state_compact``: the
+  delta-aware curation refresh and its state-log housekeeping.
 """
 
 from __future__ import annotations
@@ -28,104 +32,6 @@ def _dedup_batch(batch_df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def ingest_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    wh: ParquetWarehouse,
-    table: str,
-    keys: list[str],
-    checkpoint_dir: str,
-) -> None:
-    """Drain all currently-available files from ``source_dir`` into
-    ``wh.table`` via keyed MERGE micro-batches (trigger availableNow —
-    bounded, so callers/tests control the lifecycle).
-
-    In-batch key collisions resolve DETERMINISTICALLY (keep-first by
-    the row's non-key values as a total order): ``dropDuplicates``
-    would keep whichever row survives the shuffle, so a replayed batch
-    could commit a different row than the crashed original — values
-    must be replay-stable for the exactly-once claim to hold, not just
-    row counts."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        wh.merge_upsert(table, _dedup_batch(batch_df, keys), keys)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def ingest_documents_deduped(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    wh: ParquetWarehouse,
-    table: str,
-    index,  # operators.dedup_index.MinHashIndex
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Streaming document ingest with CROSS-BATCH near-dup dedup: each
-    micro-batch probes the persisted MinHash index for near-duplicates
-    of anything already ingested, drops them, appends the survivors'
-    postings to the index, and MERGEs the survivors into the warehouse.
-
-    Exactly-once story: the checkpoint gives at-least-once batches; the
-    keyed MERGE is idempotent and COMMITS BEFORE the index append (see
-    the ordering comment below — the reverse order permanently loses a
-    batch that crashes between the two); index.append on a replayed
-    batch writes duplicate postings, which cost probe work but cannot
-    change RESULTS. So replays converge (the weaker, documented
-    guarantee: the index is an accelerator whose duplicated postings
-    are healed by compaction, not a second source of truth)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # exact in-batch dedup first (deterministic keep-first) — the
-        # index only answers cross-batch questions
-        batch = _dedup_batch(batch_df, [id_col])
-        dups = index.probe(batch, id_col=id_col, text_col=text_col).select(
-            F.col("new_id").alias(id_col)
-        )
-        # localCheckpoint, not cache: `fresh`'s lazy plan READS the
-        # index's postings (through probe), and index.append MUTATES
-        # them — a later re-evaluation (cache miss, eviction) would see
-        # the batch's own just-appended postings, match every survivor
-        # against itself, and silently merge an EMPTY batch. The eager
-        # checkpoint pins the survivor set before the index changes.
-        fresh = batch.join(dups, id_col, "left_anti").localCheckpoint()
-        # MERGE first, index second: a crash between the two then
-        # replays as probe-miss -> idempotent re-MERGE -> append, and
-        # the batch converges. The reverse order loses the batch
-        # forever: the replay's probe would self-match every row
-        # against its own already-appended postings, hand MERGE an
-        # empty survivor set, and the rows would exist in the index
-        # but never reach the warehouse.
-        wh.merge_upsert(table, fresh, [id_col])
-        index.append(fresh, id_col=id_col, text_col=text_col)
-        # this batch's probe cache is finished once fresh is
-        # merged+indexed; release it TARGETED (not clearCache — the
-        # session may hold unrelated caches owned by other components,
-        # and a stream that evicted them every micro-batch would force
-        # their recomputation session-wide)
-        index.release()
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def ingest_stream_snapshot_merge(
     spark: SparkSession,
     source_dir: str,
@@ -136,11 +42,9 @@ def ingest_stream_snapshot_merge(
     txn_prefix: str = "merge",
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Exactly-once KEYED upsert ingest into a SnapshotTable — the
-    transactional counterpart of :func:`ingest_stream` (which merges
-    into the directory-swap warehouse). Each micro-batch dedupes
-    in-batch keys deterministically, then MERGEs under txn
-    ``{txn_prefix}-{batch_id}``:
+    """Exactly-once KEYED upsert ingest into a SnapshotTable. Each
+    micro-batch dedupes in-batch keys deterministically, then MERGEs
+    under txn ``{txn_prefix}-{batch_id}``:
 
     - replayed batches are silent no-ops (the txn map), so
       at-least-once delivery becomes exactly-once;
@@ -165,229 +69,6 @@ def ingest_stream_snapshot_merge(
 
     q = (
         stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def refresh_from_changes(
-    spark: SparkSession,
-    raw,  # operators.snapshot.SnapshotTable (append-only source)
-    clean,  # operators.snapshot.SnapshotTable (deduped output)
-    index,  # operators.dedup_index.MinHashIndex
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    txn_prefix: str = "cdc",
-) -> int | None:
-    """One tick of a CHANGE-FEED-driven incremental corpus refresh: the
-    batch composition of the round's transactional pieces, no streaming
-    runtime needed.
-
-    - **Cursor**: the last processed ``raw`` version is recovered from
-      ``clean``'s own manifest txn map (txn ids are
-      ``{txn_prefix}-{raw_version}``), so the pipeline's progress is
-      committed atomically WITH its output — no side files whose loss
-      or staleness could desync cursor and data.
-    - **Delta**: ``raw.read_changes(cursor, current)`` hands over
-      exactly the rows new commits introduced — cost ∝ new data, never
-      a rescan of the raw table.
-    - **Dedup**: in-batch keep-first, then a :class:`MinHashIndex`
-      probe drops near-duplicates of anything already ingested.
-    - **Exactly-once**: the survivors append under txn
-      ``{txn_prefix}-{current}``; a replayed tick (crash after append,
-      before/during index update) is a silent no-op on ``clean`` and
-      merely re-appends index postings — which changes probe cost, not
-      probe answers (the same converging order as
-      :func:`ingest_documents_deduped`, for the same reason).
-
-    The index lags ``clean`` by design and self-heals: a crash between
-    the clean append and the index update cannot lose survivors,
-    because the next tick re-derives the index's backlog FROM CLEAN'S
-    OWN CHANGE FEED (clean is append-only, so ``clean.read_changes``
-    over the unindexed version range IS exactly the survivor set) and
-    re-appends it before processing anything new. The index-progress
-    marker is a best-effort side file under the index directory — if
-    it is lost the heal re-appends postings it already has, which
-    changes probe cost, never probe answers. Correctness (no lost
-    rows, no duplicate rows, exact cursor) rides entirely on the two
-    manifests.
-
-    Returns the committed ``clean`` version, or None if there was
-    nothing new (or a replay already committed this delta)."""
-    import json as _json
-    import os as _os
-
-    cur = raw.current_version()
-    if cur is None:
-        return None
-    marker = _os.path.join(index.path, f"_consumed_{txn_prefix}.json")
-
-    def _mark(clean_version: int) -> None:
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({"clean_version": clean_version}, f)
-        _os.replace(tmp, marker)
-
-    cv = clean.current_version()
-    if cv is not None:
-        # heal: index everything clean committed that the index may
-        # not have seen (crash window, lost marker — both converge)
-        indexed_v = -1
-        if _os.path.exists(marker):
-            with open(marker) as f:
-                indexed_v = _json.load(f)["clean_version"]
-        if indexed_v < cv:
-            gap = clean.read_changes(indexed_v, cv)
-            index.append(gap, id_col=id_col, text_col=text_col)
-            index.release()
-            _mark(cv)
-    from ..operators.snapshot import txn_cursor
-
-    cursor = txn_cursor(clean, txn_prefix)
-    if cursor >= cur:
-        return None  # nothing new
-    batch = _dedup_batch(raw.read_changes(cursor, cur), [id_col])
-    dups = index.probe(batch, id_col=id_col, text_col=text_col).select(
-        F.col("new_id").alias(id_col)
-    )
-    # eager pin for the same reason ingest_documents_deduped does it:
-    # `fresh` reads the index's postings through probe, and
-    # index.append below mutates them — a lazy re-evaluation would
-    # self-match every survivor and append an empty delta
-    fresh = batch.join(dups, id_col, "left_anti").localCheckpoint()
-    v = clean.append(fresh, txn=f"{txn_prefix}-{cur}")
-    if v is not None:
-        index.append(fresh, id_col=id_col, text_col=text_col)
-        index.release()
-        _mark(v)
-    return v
-
-
-def ingest_stream_snapshot_append(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    table,  # operators.snapshot.SnapshotTable
-    checkpoint_dir: str,
-    txn_prefix: str = "ingest",
-) -> None:
-    """Exactly-once APPEND-ONLY ingest into a SnapshotTable — the
-    transactional-sink variant of :func:`ingest_stream` for tables
-    with no natural merge key (event logs, raw captures). The
-    checkpoint replays batches at-least-once; the manifest's txn
-    record (``{txn_prefix}-{batch_id}``) makes each batch's append
-    idempotent, so replays are no-ops instead of duplicate rows, and
-    readers only ever see whole committed batches (snapshot
-    isolation), never a half-written directory."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table.append(batch_df, txn=f"{txn_prefix}-{batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def ingest_stream_ivm(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    table,  # operators.snapshot.SnapshotTable (the raw source table)
-    ivm,  # operators.ivm.IncrementalAgg maintaining a view OVER table
-    checkpoint_dir: str,
-    txn_prefix: str = "ingest",
-) -> None:
-    """Exactly-once ingest WITH a continuously maintained aggregate
-    view: each micro-batch appends into the source SnapshotTable
-    (txn-idempotent, as :func:`ingest_stream_snapshot_append`) and
-    then folds the new source versions into the IVM view in the same
-    foreachBatch — the dashboard table is delta-fresh after every
-    batch without ever re-scanning the source.
-
-    Crash-safety needs no two-phase dance: a replayed batch's append
-    is absorbed by the source txn record, and the tick's own durable
-    cursor (the view manifest's untrimmed ``cursors`` map) makes the
-    fold idempotent — a crash BETWEEN append and tick simply leaves
-    the cursor behind by one version, and the next batch's tick folds
-    both versions. Progress on both tables commits atomically with
-    their data; correctness never depends on the Spark checkpoint
-    agreeing with either manifest.
-
-    Caveat (all batch-id-txn sinks share it, Delta's txnAppId
-    included): txn ids derive from BATCH ids, which restart at 0 in a
-    fresh checkpoint — so ``txn_prefix`` is bound to one checkpoint
-    lineage. Re-pointing a NEW checkpoint at a table previously fed
-    under the same prefix absorbs the new batches as replays; use a
-    new prefix (or the same checkpoint) when resuming."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def append_and_fold(batch_df: DataFrame, batch_id: int) -> None:
-        table.append(batch_df, txn=f"{txn_prefix}-{batch_id}")
-        ivm.tick()
-
-    q = (
-        stream.writeStream.foreachBatch(append_and_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def ingest_stream_distinct_sketches(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    table,  # operators.snapshot.SnapshotTable (the sketch rollup)
-    value_col: str,
-    group_cols: list[str],
-    checkpoint_dir: str,
-    lg_k: int | None = None,
-    txn_prefix: str = "sk",
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Maintain a persisted distinct-count sketch rollup from a stream:
-    each micro-batch folds its rows into one HLL sketch per group
-    (operators/sketches.py) and APPENDS the sketch rows — never
-    updates. A group seen in many batches simply owns many sketch
-    rows; the read path unions them, and union is register-wise max,
-    so the rollup is correct under any batch slicing.
-
-    Exactly-once here is double-walled: the per-batch txn id makes a
-    replayed batch a silent no-op on the table — and even if a replay
-    somehow re-appended its sketches (say, a checkpoint rebuilt under
-    a fresh txn prefix), HLL union is IDEMPOTENT (max of the same
-    registers twice is itself), so the ESTIMATES are already
-    replay-proof before the transactional layer does anything. State:
-    the stream carries none at all — no watermark, no GroupState; the
-    sketch rows in the table are the state, a few KB per group-batch."""
-    from ..operators.sketches import DEFAULT_LG_K, build_distinct_sketches
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        table.append(
-            build_distinct_sketches(
-                batch_df,
-                value_col,
-                group_cols,
-                lg_k if lg_k is not None else DEFAULT_LG_K,
-            ),
-            txn=f"{txn_prefix}-{batch_id}",
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -503,68 +184,6 @@ def ingest_batch_passage_dedup(
     }
 
 
-def curation_refresh_tick(
-    spark: SparkSession,
-    wh: ParquetWarehouse,
-    table: str,
-    selection,  # operators.snapshot.SnapshotTable
-    txn: str,
-    scorer=None,
-    topk: int | None = None,
-    prepare=None,
-) -> dict:
-    """Periodic derived-selection refresh — the step that closes the
-    continuous-curation loop: the ingest ticks keep the corpus table
-    current (WARC extraction, quality quarantine, passage/minhash
-    dedup, index maintenance); this tick re-runs the BATCH curation
-    funnel (``plans/text.curation_funnel``: quality gate → exact dedup
-    → DSIR over survivors) over the warehouse's CURRENT corpus and
-    commits the selected training mix as a new ``SnapshotTable``
-    version. The selection history is then time-travelable — "exactly
-    which documents were in the mix at version N" is one
-    ``selection.read(version=N)`` — which is the auditable
-    training-data lineage a 100 TB pipeline owes its downstream
-    training runs.
-
-    Exactly-once per refresh identity: ``txn`` (e.g.
-    ``f"curate-{source_offset}"``) rides the snapshot's rolling txn
-    map, so a crashed-and-retried refresh converges on ONE committed
-    version instead of stacking identical ones; the funnel itself is
-    deterministic, so the retry's content is bit-identical anyway.
-    ``wh.read(table)`` must carry the documents contract the funnel
-    scores (``doc_id``, ``lang``, ``text``) — or ``prepare`` adapts
-    it: a callable ``docs -> docs`` applied before the funnel, e.g.
-    deriving ``lang`` for a crawl table via the marker-word language
-    ID (crawled corpora carry no labels; the enrichment is part of
-    the curation, so it belongs inside the refresh and is replayed
-    deterministically with it). ``scorer``/``topk`` forward to
-    :func:`curation_funnel`.
-
-    Cost shape: one funnel pass over the corpus per refresh (stage 1's
-    broadcast scorer dominates — SCALE.md's funnel rows), one tiny
-    commit (the selection is topk rows). Refresh cadence is the
-    caller's knob — every N ingest ticks, not every tick.
-
-    When the corpus lives in a :class:`SnapshotTable` instead of a
-    warehouse table, use :func:`curation_refresh_delta_tick` (r10): it
-    commits the bit-identical selection while scoring only the
-    documents the corpus CHANGED since the last refresh — this
-    full-recompute form remains for keyed warehouse tables, whose
-    MERGE rewrites carry no row-level change feed to drive a delta."""
-    from ..plans.text import curation_funnel
-
-    docs = wh.read(table)
-    if prepare is not None:
-        docs = prepare(docs)
-    kwargs = {} if topk is None else {"topk": topk}
-    sel = curation_funnel(docs, scorer=scorer, **kwargs)
-    version = selection.replace(sel, txn=txn)
-    return {
-        "version": version,  # None => replayed txn, no new commit
-        "selected": selection.read().count(),
-    }
-
-
 def curation_refresh_delta_tick(
     spark: SparkSession,
     corpus,  # operators.snapshot.SnapshotTable (the corpus source)
@@ -577,9 +196,10 @@ def curation_refresh_delta_tick(
     compact_every: int | None = 16,
 ) -> dict:
     """Delta-aware continuous-curation refresh (VERDICT r9 #1):
-    re-selects the training mix like :func:`curation_refresh_tick`,
-    but pays the expensive per-document work — quality scoring,
-    tokenization, gram hashing — only for documents the corpus
+    re-selects the training mix (``plans/text.curation_funnel`` over
+    the corpus, committed with ``selection.replace``), but pays the
+    expensive per-document work — quality scoring, tokenization, gram
+    hashing — only for documents the corpus
     CHANGED since the last refresh, while committing a selection
     **bit-identical** to running the full batch funnel
     (``plans/text.curation_funnel``) over the corpus's current state.
@@ -639,8 +259,7 @@ def curation_refresh_delta_tick(
     so whichever side of a crash the retry lands on, it ranks the
     same committed state. The cursor is recovered from
     ``selection``'s own txn map (:func:`txn_cursor`) — progress
-    commits atomically with the output, the
-    :func:`refresh_from_changes` discipline. If the corpus advanced
+    commits atomically with the output. If the corpus advanced
     again before a crashed refresh retried, the retry's wider delta
     re-scores the earlier documents under the newer version — the
     (doc_id, __v) join then serves exactly the newest rows.
@@ -649,7 +268,7 @@ def curation_refresh_delta_tick(
     ``lang`` for a crawl table) and therefore MUST be a deterministic
     per-row transform — it sees only changed documents, so any
     cross-document logic would diverge from the batch funnel.
-    ``scorer``/``topk`` forward as in :func:`curation_refresh_tick`.
+    ``scorer``/``topk`` forward to the funnel.
 
     State maintenance: superseded (older-``__v``) and tombstoned rows
     accumulate in the logs; the tick runs its own housekeeping (the
@@ -1037,201 +656,3 @@ def curation_state_compact(stats, grams, txn: str) -> dict:
     return {"stats_version": sv, "grams_version": gv}
 
 
-def vector_index_tick(
-    spark: SparkSession,
-    drop_dir: str,
-    state,  # streaming.snapshot_diff.SnapshotState
-    index,  # operators.ann_index.IVFVectorIndex
-    exts: tuple[str, ...] = (".parquet",),
-    state_key: str = "vectors",
-    delete_dir: str | None = None,
-    compact_budget: int | str | None = "auto",
-    recall_target: float | None = None,
-    rebucket_stage_rows: int | None = None,
-) -> dict:
-    """Continuous ANN-index maintenance over a vector drop directory —
-    the fourth member of the index family joins the ingest loop
-    (MinHashIndex and WindowHashIndex ride the WARC tick, the
-    InvertedTextIndex its txn-guarded read-back; this tick does the
-    embeddings). Each fire appends the new/modified parquet drops'
-    vectors to the persisted IVF index (map-only assignment,
-    partitioned append into ``cid=`` lists) and compacts fat lists.
-
-    Exactly-once ANSWERS without txn machinery: a crashed-tick replay
-    or a state-loss full reprocess re-appends bit-identical rows —
-    each file's rows are stamped with the file's mtime_ns as their
-    version ordinal, which a replay reproduces exactly — and the
-    probe's per-candidate fold tolerates the duplicates until the
-    next compaction physically removes them. There is no corpus-stats
-    row to drift (contrast ``InvertedTextIndex``, whose N/avgdl
-    needed the txn guard). Offsets commit only after the append
-    lands, so a crash mid-tick re-arms the same drops.
-
-    MODIFIED drops are genuine updates, not replays: they append with
-    ``supersede=True`` so the index's ``latest/`` roster masks every
-    earlier version of those ids from probes and compaction reclaims
-    the stale rows (r8 ADVICE fix — previously the probe scored an
-    updated id against both its old and new vectors and served
-    whichever scored higher). The file's mtime_ns is the version
-    order, so a later re-modification always outranks — and a
-    REGRESSED ordinal (clock skew, mtime-preserving copy) now fails
-    the append loudly instead of silently masking the update
-    (``IVFVectorIndex.append``'s roster guard, r8 ADVICE). Removing
-    ids by omitting them from a modified file is not supported (drops
-    are add/update only).
-
-    Growth maintenance (r9): after compaction the tick also calls
-    ``index.maybe_rebucket()`` — a store built small that grows past
-    ``IVF_AUTO_MIN_N`` across ticks retrains its quantizer k ∝ N and
-    re-buckets crash-safely, so list sizes (and probe cost) stay
-    bounded instead of fattening ∝ N/k forever (VERDICT r8 #2). The
-    tick's index handle serves the new quantizer immediately;
-    later processes reopen via ``IVFVectorIndex.open``.
-
-    Deletion drop-lists (r9): ``delete_dir`` watches a SECOND
-    directory whose parquet files carry ids to REMOVE (the index's id
-    column) — the takedown/right-to-erasure flow a training-data
-    pipeline owes its sources. Each list's mtime_ns is its tombstone
-    ordinal, so the whole replay discipline carries over: a
-    crashed-tick retry re-derives the identical tombstones and
-    no-ops (even when a later re-add has legitimately out-ranked
-    them — ``delete``'s replay-aware guard), a regenerated list
-    carries a higher ordinal, and ordering between adds and deletes
-    is decided by ORDINALS, not processing order. Removal is
-    O(deleted ids) at tick time; compaction reclaims rows."""
-    import os as _os
-
-    diff, snapshot = state.peek(state_key, drop_dir, exts)
-    changed = tuple(sorted((*diff.new, *diff.modified)))
-    del_files: tuple = ()
-    dsnap = None
-    if delete_dir is not None:
-        ddiff, dsnap = state.peek(
-            state_key + ":deletes", delete_dir, exts
-        )
-        del_files = tuple(sorted((*ddiff.new, *ddiff.modified)))
-    if not changed and not del_files:
-        # an IN-FLIGHT staged rebucket still advances on a no-op tick
-        # (r14): the multi-tick protocol must not stall when the drop
-        # stream drains — otherwise probes would serve the pre-growth
-        # layout indefinitely on a quiet store. Ordinary maintenance
-        # keeps the historical no-op contract (do nothing).
-        from ..operators.ann_index import _STAGE_MANIFEST
-
-        if rebucket_stage_rows is not None and _os.path.exists(
-            _os.path.join(index.path, _STAGE_MANIFEST)
-        ):
-            rebucketed = index.maybe_rebucket(
-                stage_rows=rebucket_stage_rows,
-                recall_target=recall_target,
-            )
-            serving = (
-                getattr(index, "staged_serving", None)
-                if rebucketed
-                else None
-            )
-            return {
-                "fired": False,
-                "files": (),
-                "vectors": 0,
-                "deleted": 0,
-                "rebucketed": rebucketed,
-                "rebucket_phase": getattr(
-                    index, "rebucket_phase", None
-                ),
-                "compacted": 0,
-                "serving": serving,
-            }
-        return {"fired": False, "files": (), "vectors": 0, "deleted": 0}
-    modified = set(diff.modified)
-    # Adds and deletes APPLY in ascending ordinal (mtime_ns) order
-    # across BOTH directories (r9 ADVICE, medium): processing all
-    # adds then all deletes let a same-tick supersede out-rank an
-    # OLDER takedown list mid-tick, tripping ``delete``'s guards and
-    # aborting before ``state.commit`` — and every retry re-ran the
-    # same order, a permanent wedge that also re-appended duplicate
-    # supersede rows. The same hazard held among add files alone:
-    # filename sort could oppose mtime order for two files
-    # superseding one id. Ordinal-sorted application makes the
-    # docstring's claim ("ordering is decided by ordinals, not
-    # processing order") true by construction. Ties: adds before
-    # deletes — the roster fold already breaks an equal-ordinal tie
-    # toward the tombstone, and applying the add first keeps
-    # ``append``'s equal-ordinal tombstone guard replay-exempt.
-    work = [("add", name, snapshot[name]) for name in changed]
-    if dsnap is not None:
-        work += [("del", name, dsnap[name]) for name in del_files]
-    work.sort(key=lambda t: (t[2], t[0] != "add", t[1]))
-    n = 0
-    n_del = 0
-    for kind, name, ordinal in work:  # driver-bounded: files-per-tick
-        if kind == "add":
-            vecs = spark.read.parquet(_os.path.join(drop_dir, name))
-            n += vecs.count()
-            index.append(
-                vecs, ordinal=ordinal, supersede=name in modified
-            )
-        else:
-            ids = spark.read.parquet(_os.path.join(delete_dir, name))
-            n_del += ids.count()
-            index.delete(ids, ordinal=ordinal)
-    # budgeted: a uniform drop fattens ~every cid= list at once, so
-    # an unbounded pass is a periodic whole-store rewrite stalling
-    # the loop (~122 s bursts in the r12 21-tick table vs ~10 s
-    # steady). Fattest-first keeps per-tick maintenance ≤ budget
-    # rewrites; deferred lists rise to the top next tick (r13,
-    # VERDICT r12 #2).
-    compacted = index.maybe_compact(budget=compact_budget)
-    # rebucket_stage_rows bounds the GROWTH event the same way
-    # compact_budget bounds folds (r14, VERDICT r13 #3): instead of
-    # one whole-store retrain+rewrite tick, the rebucket advances one
-    # budgeted phase per tick (plan → n stages → swap) and probes
-    # serve the old layout until the final atomic swap — rebucketed
-    # goes True only on the swap tick, so the reselect_serving hook
-    # below still fires exactly once per completed rebucket.
-    # recall_target only forwards in STAGED mode (the plan tick runs
-    # the sweep once and the receipt installs at the swap); in
-    # one-shot mode the post-hoc reselect_serving below is the single
-    # sweep — forwarding would run the identical ladder twice per
-    # growth tick (r14 review finding)
-    rebucketed = index.maybe_rebucket(
-        stage_rows=rebucket_stage_rows,
-        recall_target=(
-            recall_target if rebucket_stage_rows is not None else None
-        ),
-    )
-    # serving-config refresh (r13, VERDICT r12 #3): a rebucket changes
-    # list geometry, so a hint chosen for the OLD quantizer silently
-    # drifts recall (0.656 at the end of the r12 21-tick walk while
-    # n_probe stayed at its build-time value). Re-run the held-out
-    # sweep against the new quantizer and persist the measured widths
-    # as the store's serving hint — rebuckets are rare growth events,
-    # so the sweep cost amortizes; cadence callers can also invoke
-    # index.reselect_serving directly.
-    serving = None
-    if rebucketed and recall_target is not None:
-        # staged protocol (r14): the sweep already ran at PLAN time
-        # (it depends only on quantizer + live rows, never the file
-        # layout) and its measured receipt traveled in the manifest —
-        # installing the hints at the swap costs nothing. One-shot
-        # rebuckets keep the post-hoc reselect.
-        staged = getattr(index, "staged_serving", None)
-        if rebucket_stage_rows is not None and staged is not None:
-            serving = staged
-        else:
-            serving = index.reselect_serving(recall_target)
-    state.commit(state_key, snapshot)
-    if dsnap is not None:
-        state.commit(state_key + ":deletes", dsnap)
-    state.save()
-    return {
-        "fired": True,
-        "files": changed,
-        "vectors": n,
-        "deleted": n_del,
-        "delete_files": del_files,
-        "rebucketed": rebucketed,
-        "rebucket_phase": getattr(index, "rebucket_phase", None),
-        "compacted": compacted,
-        "serving": serving,
-    }

@@ -6,12 +6,11 @@ Each tick mirrors the snapshot-diff contract the daemon uses for
 PDF/DOCX drops — mtime-diff the segment directory, process only the
 new/modified ``*.warc(.gz)`` files, commit the offset AFTER the batch
 (peek/commit, never poll) — and lands extracted HTML documents through
-the SAME exactly-once machinery as the streaming document ingest:
-keyed MERGE into the warehouse (idempotent under replay), optional
-cross-batch near-dup dedup via the persisted MinHashIndex with the
-proven MERGE-before-index-append ordering (streaming/ingest.py — the
-reverse order loses a crashed batch forever; this order merely
-re-appends postings, which changes probe cost, never answers), and an
+exactly-once machinery: keyed MERGE into the warehouse (idempotent
+under replay), optional cross-batch near-dup dedup via the persisted
+MinHashIndex with the MERGE-before-index-append ordering (the reverse
+order loses a crashed batch forever; this order merely re-appends
+postings, which changes probe cost, never answers), and an
 optional continuously-maintained BM25 text index (InvertedTextIndex)
 fed by a post-MERGE warehouse read-back under a segment-derived txn
 guard, so search freshness survives the same crash matrix.
@@ -202,9 +201,9 @@ def warc_ingest_tick(
         dups = index.probe(keyed, id_col="__iid", text_col="text").select(
             F.col("new_id").alias("__iid")
         )
-        # eager pin before the index mutates (see streaming/ingest.py:
-        # a lazy survivor plan re-evaluated after index.append would
-        # self-match every row and merge an empty batch)
+        # eager pin before the index mutates (a lazy survivor plan
+        # re-evaluated after index.append would self-match every row
+        # and merge an empty batch)
         fresh = keyed.join(dups, "__iid", "left_anti").localCheckpoint()
     else:
         fresh = batch  # already pinned by its own localCheckpoint

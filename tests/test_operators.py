@@ -3,7 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_engineer_challenge_spark.operators.dedup import exact_dedup, keep_first_dedup
-from data_engineer_challenge_spark.operators.ids import dense_ids, extend_ids, scalable_ids
+from data_engineer_challenge_spark.operators.ids import dense_ids
 from data_engineer_challenge_spark.operators.joins import anti_join, semi_join
 
 
@@ -26,15 +26,6 @@ def test_dense_and_extended_ids(spark):
     df = spark.createDataFrame([("c",), ("a",), ("b",)], "k string")
     out = {r["k"]: r["id"] for r in dense_ids(df, "id", ["k"]).collect()}
     assert out == {"a": 1, "b": 2, "c": 3}
-    more = spark.createDataFrame([("e",), ("d",)], "k string")
-    out2 = {r["k"]: r["id"] for r in extend_ids(more, "id", 3, ["k"]).collect()}
-    assert out2 == {"d": 4, "e": 5}
-
-
-def test_scalable_ids_dense_and_unique(spark):
-    df = spark.range(0, 10_000).repartition(7)
-    ids = [r["id2"] for r in scalable_ids(df, "id2").collect()]
-    assert sorted(ids) == list(range(1, 10_001))
 
 
 def test_joins(spark):

@@ -15,10 +15,11 @@ from data_engineer_challenge_spark.operators.merge import ParquetWarehouse
 from data_engineer_challenge_spark.pipeline import run_document_batch, run_patient_batch
 from data_engineer_challenge_spark.schemas import DWH_DOCUMENT, DWH_PATIENT
 from data_engineer_challenge_spark.sources.binary_docs import (
+    document_paths,
     extract_documents,
-    read_binary_documents,
 )
 from data_engineer_challenge_spark.sources.xlsx import read_patient_registry
+from data_engineer_challenge_spark.streaming.snapshot_diff import take_snapshot
 
 from .fixtures import XLSX_HEADER, build_docx, build_pdf, build_xlsx
 
@@ -35,6 +36,15 @@ ROWS = [
 DOCX_TEXT_RUNS = ["Compte rendu", "Né le 01/01/1940", "Vu le 12/05/2018", "dr mamy nova"]
 PDF_LINES = ["Rapport du 17/10/2011", "signé Dr Hassan"]
 PDF_ORPHAN = ["Aucun patient 01/03/2019", "Dr Personne"]
+
+
+def _drop_files(spark, directory):
+    """(filename, text) of a drop directory as the daemon reads it: its
+    snapshot listing, extracted through ``document_paths``."""
+    directory = str(directory)
+    return extract_documents(
+        document_paths(spark, directory, take_snapshot(directory))
+    )
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +65,7 @@ def warehouse(spark, corpus_dir, tmp_path_factory):
     wh = ParquetWarehouse(spark, str(tmp_path_factory.mktemp("wh")))
     registry = read_patient_registry(spark, str(corpus_dir / "export_patient.xlsx"))
     run_patient_batch(wh, registry, upload_id=1)
-    files = extract_documents(read_binary_documents(spark, str(corpus_dir / "docs")))
+    files = _drop_files(spark, corpus_dir / "docs")
     rejects = run_document_batch(wh, files, upload_id=1)
     return wh, rejects
 
@@ -158,7 +168,7 @@ def test_document_business_key_collision_no_fanout(spark, tmp_path):
         build_docx(textbox_runs=["le 02/02/2010", "dr docx"])
     )
     for upload in (1, 2):
-        files = extract_documents(read_binary_documents(spark, str(docs)))
+        files = _drop_files(spark, docs)
         run_document_batch(wh, files, upload_id=upload)
         rows = wh.read("DWH_DOCUMENT").collect()
         assert len(rows) == 1, f"fan-out on upload {upload}"
@@ -174,7 +184,7 @@ def test_idempotent_reruns_and_stable_doc_nums(warehouse, spark, corpus_dir):
     }
     registry = read_patient_registry(spark, str(corpus_dir / "export_patient.xlsx"))
     run_patient_batch(wh, registry, upload_id=2)
-    files = extract_documents(read_binary_documents(spark, str(corpus_dir / "docs")))
+    files = _drop_files(spark, corpus_dir / "docs")
     run_document_batch(wh, files, upload_id=2)
 
     docs = wh.read("DWH_DOCUMENT").collect()
@@ -189,7 +199,7 @@ def test_idempotent_reruns_and_stable_doc_nums(warehouse, spark, corpus_dir):
     (corpus_dir / "docs" / "00000042_555.pdf").write_bytes(
         build_pdf(["Visite du 05/05/2021", "dr qui"])
     )
-    files3 = extract_documents(read_binary_documents(spark, str(corpus_dir / "docs")))
+    files3 = _drop_files(spark, corpus_dir / "docs")
     run_document_batch(wh, files3, upload_id=3)
     final = {r["ID_DOC_SOURCE"]: r["DOCUMENT_NUM"] for r in wh.read("DWH_DOCUMENT").collect()}
     assert {k: v for k, v in final.items() if k in before} == before

@@ -37,7 +37,7 @@ pytestmark = pytest.mark.skipif(
 
 
 def test_real_corpus_golden_metadata(spark):
-    """binaryFile scan → stdlib extraction UDF → Spark F2/F3/P13
+    """Snapshot listing → stdlib extraction UDF → Spark F2/F3/P13
     expressions, against the reference's real files end-to-end."""
     from pyspark.sql import functions as F
 
@@ -48,11 +48,16 @@ def test_real_corpus_golden_metadata(spark):
         filename_extension,
     )
     from data_engineer_challenge_spark.sources.binary_docs import (
+        document_paths,
         extract_documents,
-        read_binary_documents,
+    )
+    from data_engineer_challenge_spark.streaming.snapshot_diff import (
+        take_snapshot,
     )
 
-    files = extract_documents(read_binary_documents(spark, REF_DIR))
+    files = extract_documents(
+        document_paths(spark, REF_DIR, take_snapshot(REF_DIR))
+    )
     out = {
         r["filename"]: r
         for r in files.select(
@@ -101,17 +106,22 @@ def test_real_corpus_full_pipeline(spark, tmp_path):
         run_patient_batch,
     )
     from data_engineer_challenge_spark.sources.binary_docs import (
+        document_paths,
         extract_documents,
-        read_binary_documents,
     )
     from data_engineer_challenge_spark.sources.xlsx import read_patient_registry
+    from data_engineer_challenge_spark.streaming.snapshot_diff import (
+        take_snapshot,
+    )
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     registry = read_patient_registry(
         spark, os.path.join(REF_DIR, "export_patient.xlsx"), "Export Worksheet"
     )
     run_patient_batch(wh, registry, upload_id=1)
-    files = extract_documents(read_binary_documents(spark, REF_DIR))
+    files = extract_documents(
+        document_paths(spark, REF_DIR, take_snapshot(REF_DIR))
+    )
     rejects = run_document_batch(wh, files, upload_id=1)
 
     docs = wh.read("DWH_DOCUMENT").collect()

@@ -170,49 +170,6 @@ def test_append_race_does_not_lose_the_racers_rows(spark, tmp_path):
     assert _ids(t.read()) == {1, 2, 50}
 
 
-def test_streaming_snapshot_append_exactly_once_under_replay(spark, tmp_path):
-    """End-to-end with real Structured Streaming checkpoints: ingest a
-    wave; re-running with the same checkpoint and no new files commits
-    nothing; a crashed-commit replay (the foreachBatch re-executing
-    with the original batch id, which is exactly what Spark does after
-    a failure between sink write and checkpoint commit) is absorbed by
-    the txn record instead of duplicating rows; and a genuinely new
-    wave still lands as the next batch."""
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from data_engineer_challenge_spark.streaming.ingest import (
-        ingest_stream_snapshot_append,
-    )
-
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    src = str(tmp_path / "src")
-    _df(spark, [1, 2, 3]).write.parquet(src)
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    ckpt = str(tmp_path / "ckpt")
-
-    ingest_stream_snapshot_append(spark, src, schema, t, ckpt)
-    assert _ids(t.read()) == {1, 2, 3}
-    v_after_first = t.current_version()
-
-    # same checkpoint, no new files: stream finds nothing, no commits
-    ingest_stream_snapshot_append(spark, src, schema, t, ckpt)
-    assert t.current_version() == v_after_first
-
-    # simulate the foreachBatch replay after a crash mid-commit: the
-    # same batch id re-executes against the sink
-    t.append(_df(spark, [1, 2, 3]), txn="ingest-0")
-    assert _ids(t.read()) == {1, 2, 3}  # absorbed, not duplicated
-
-    # a genuinely new wave of files lands as the next batch
-    _df(spark, [4]).write.mode("append").parquet(src)
-    ingest_stream_snapshot_append(spark, src, schema, t, ckpt)
-    assert _ids(t.read()) == {1, 2, 3, 4}
-
-
 def test_vacuum_rejects_keeping_nothing(spark, tmp_path):
     """keep_versions=0 would delete every data dir while manifests
     still reference them — refused."""
@@ -737,10 +694,6 @@ def test_lakehouse_roundtrip_integration(spark, tmp_path):
     keyed MERGE corrections → optimize clustering → stats-pruned read →
     auto-compaction threshold → vacuum, with time travel checked at
     the end across the whole history."""
-    from data_engineer_challenge_spark.operators.dedup_index import MinHashIndex
-    from data_engineer_challenge_spark.streaming.ingest import (
-        refresh_from_changes,
-    )
     from data_engineer_challenge_spark.tables import load_table
     from pyspark.sql import types as T
 
@@ -755,14 +708,12 @@ def test_lakehouse_roundtrip_integration(spark, tmp_path):
     )
     raw = SnapshotTable(spark, str(tmp_path / "raw"))
     clean = SnapshotTable(spark, str(tmp_path / "clean"))
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), threshold=0.8)
-    idx.build(spark.createDataFrame([], schema))
 
-    # three CDC ticks of 15 docs each
+    # three CDC ticks of 15 docs each: clean appends raw's change feed
     rows = docs.limit(45).collect()
     for i in range(3):
-        raw.append(spark.createDataFrame(rows[i * 15 : (i + 1) * 15], schema))
-        refresh_from_changes(spark, raw, clean, idx)
+        v = raw.append(spark.createDataFrame(rows[i * 15 : (i + 1) * 15], schema))
+        clean.append(raw.read_changes(v - 1, v), txn=f"cdc-{v}")
     assert clean.read().count() == 45
 
     # a keyed correction lands transactionally

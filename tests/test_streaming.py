@@ -1,6 +1,7 @@
 """Streaming surface tests: snapshot-diff change detection, the polling
-daemon's trigger/lineage behavior (SURVEY §5.3 streaming plan), and
-Structured Streaming windowed aggs vs their batch equivalents."""
+daemon's trigger/lineage behavior (SURVEY §5.3 streaming plan), and the
+exactly-once ingest ticks of ``streaming/ingest.py`` and
+``streaming/warc_ingest.py``."""
 
 from __future__ import annotations
 
@@ -14,11 +15,6 @@ from data_engineer_challenge_spark.streaming.snapshot_diff import (
     SnapshotState,
     diff_snapshots,
     take_snapshot,
-)
-from data_engineer_challenge_spark.streaming.windows import (
-    session_counts,
-    sliding_counts,
-    tumbling_counts,
 )
 
 from .fixtures import XLSX_HEADER, build_pdf, build_xlsx
@@ -142,11 +138,12 @@ def test_daemon_failed_tick_keeps_trigger_armed(daemon_env, spark):
 
 
 def test_binary_source_matches_any_extension_case(spark, tmp_path):
-    """pathGlobFilter is case-sensitive but the snapshot trigger
-    lower()s names — the source must ingest SCAN.PDF etc. so a change
+    """The daemon's snapshot listing matches extensions in any letter
+    case, and every listed file reaches extraction: a SCAN.PDF drop
     that fires the daemon is never silently skipped."""
     from data_engineer_challenge_spark.sources.binary_docs import (
-        read_binary_documents,
+        document_paths,
+        extract_documents,
     )
 
     d = tmp_path / "docs"
@@ -155,10 +152,16 @@ def test_binary_source_matches_any_extension_case(spark, tmp_path):
     (d / "12345678_2.PDF").write_bytes(build_pdf(["le 02/02/2002", "dr b"]))
     (d / "99999999_3.Pdf").write_bytes(build_pdf(["le 03/03/2003", "dr c"]))
     (d / "skip.txt").write_bytes(b"z")
-    names = {
-        r["filename"] for r in read_binary_documents(spark, str(d)).collect()
+    listed = take_snapshot(str(d))
+    assert set(listed) == {"00230580_1.pdf", "12345678_2.PDF", "99999999_3.Pdf"}
+    texts = {
+        r["filename"]: r["text"]
+        for r in extract_documents(
+            document_paths(spark, str(d), listed)
+        ).collect()
     }
-    assert names == {"00230580_1.pdf", "12345678_2.PDF", "99999999_3.Pdf"}
+    assert set(texts) == set(listed)
+    assert all(texts.values())
 
 
 def test_daemon_changed_only_mode(spark, tmp_path):
@@ -433,35 +436,6 @@ def test_daemon_steady_ticks_reuse_compiled_code(spark, tmp_path):
     assert per_tick["registry"][-1] <= 8 and per_tick["document"][-1] <= 8, per_tick
 
 
-@pytest.mark.parametrize("builder", [tumbling_counts, sliding_counts, session_counts])
-def test_stream_windows_match_batch(spark, tmp_path, builder):
-    from data_engineer_challenge_spark.schemas import TESTDATA
-    from data_engineer_challenge_spark.tables import load_table
-
-    batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    batch.write.parquet(str(tmp_path / "stream_src"))
-
-    stream = (
-        spark.readStream.schema(TESTDATA["events"])
-        .parquet(str(tmp_path / "stream_src"))
-    )
-    name = f"sink_{builder.__name__}"
-    q = (
-        builder(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()}
-    finally:
-        q.stop()
-    want = {tuple(r) for r in builder(batch).collect()}
-    assert got == want and len(got) > 0
-
-
 def test_daemon_quarantine_table(daemon_env, spark):
     daemon, root = daemon_env
     daemon.tick()
@@ -470,94 +444,6 @@ def test_daemon_quarantine_table(daemon_env, spark):
     q = {r["filename"]: r for r in daemon.wh.read("QUARANTINE_DOCUMENTS").collect()}
     assert "55555555_9.pdf" in q
     assert q["55555555_9.pdf"]["reason"] == "NO_MATCHING_PATIENT"
-
-
-def test_watermark_drops_late_rows_append_mode(spark, tmp_path):
-    """The 100 TB state-bounding claim, proven: in append mode with a
-    2 h watermark, an event arriving behind the watermark is DROPPED
-    from its window (the window never materializes), while on-time
-    windows finalize with exactly their on-time rows. maxFilesPerTrigger
-    forces one file per micro-batch so the watermark advances between
-    arrivals like a real stream."""
-    import time as _time
-
-    from pyspark.sql import Row, types as T
-
-    from data_engineer_challenge_spark.streaming.windows import tumbling_counts
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    import datetime
-
-    def ev(i, hhmm):
-        h, m = hhmm
-        return Row(
-            event_id=i,
-            ts=datetime.datetime(2024, 3, 1, h, m),
-            user_id=1,
-            event_type="click",
-            value=1.0,
-            props=None,
-        )
-
-    src = tmp_path / "late_src"
-    src.mkdir()
-    # Two subtleties this test pins (both verified empirically):
-    # (1) the late criterion is WINDOW END <= watermark, not event
-    #     time — an 08:00 row after a 08:45 wm is still accepted
-    #     because its window runs to 09:00;
-    # (2) the drop filter uses the watermark as of the PREVIOUS
-    #     batch's close, so the late row must arrive two batches
-    #     after the data that advanced the wm past its window.
-    waves = [
-        [ev(1, (10, 30)), ev(2, (10, 45))],  # wm after this batch: 08:45
-        [ev(4, (13, 0))],                    # wm 08:45 active; after: 11:00
-        [ev(3, (6, 30))],                    # window end 07:00 < wm -> DROPPED
-        [ev(5, (16, 0))],                    # advances wm -> windows close
-    ]
-    for i, wave in enumerate(waves):
-        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
-            str(src / f"wave{i}")
-        )
-        _time.sleep(1.1)  # distinct mtimes -> deterministic batch order
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*"))
-    )
-    q = (
-        tumbling_counts(stream, window="1 hour", watermark="2 hours")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("late_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {
-            (r["window_start"].hour, r["n_events"])
-            for r in spark.sql("SELECT * FROM late_sink").collect()
-        }
-        dropped = sum(
-            (p["stateOperators"][0].get("numRowsDroppedByWatermark") or 0)
-            for p in q.recentProgress
-            if p["stateOperators"]
-        )
-    finally:
-        q.stop()
-    assert (10, 2) in rows, rows       # on-time window finalized intact
-    assert (13, 1) in rows, rows       # the later fresh row landed
-    assert all(h != 6 for h, _ in rows), rows  # the late row was dropped
-    assert dropped == 1, dropped       # and the engine COUNTED the drop
 
 
 def test_daemon_restart_resumes_counters(daemon_env, spark):
@@ -631,623 +517,6 @@ def test_snapshot_state_format_versioning(tmp_path):
     assert st4.snapshots == {"docs": {"a.pdf": 1}} and st4.counters == {"batch": 3}
 
 
-def test_streaming_heavy_hitter_candidates(spark, tmp_path):
-    """Streaming MG summaries across real micro-batches: candidates
-    after the final batch must cover every key whose GLOBAL count
-    exceeds n/capacity even when its occurrences are spread over
-    batches (the cross-batch survival guarantee), with per-shard state
-    bounded by the capacity."""
-    import time as _time
-
-    from data_engineer_challenge_spark.streaming.stateful import (
-        streaming_heavy_hitter_candidates,
-    )
-
-    schema = "user_id long"
-    src = tmp_path / "hh_src"
-    src.mkdir()
-    # 3 waves: key 1 heavy but SPREAD (never dominant in one wave),
-    # key 2 heavy in one wave, long-tail noise keys everywhere
-    waves = [
-        [(1,)] * 120 + [(10_000 + i,) for i in range(300)],
-        [(1,)] * 120 + [(2,)] * 300 + [(20_000 + i,) for i in range(300)],
-        [(1,)] * 120 + [(30_000 + i,) for i in range(300)],
-    ]
-    for i, wave in enumerate(waves):
-        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
-            str(src / f"wave{i}")
-        )
-        _time.sleep(1.1)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*"))
-    )
-    cap = 16
-    q = (
-        streaming_heavy_hitter_candidates(stream, "user_id", capacity=cap)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("hh_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # the memory sink accumulates one emission per (shard, batch);
-        # the union of ALL emitted keys is a superset of the final
-        # shard summaries — still bounded (batches x shards x capacity)
-        # and candidate completeness is all the downstream exact
-        # verify pass needs
-        cand = {
-            r["key"] for r in spark.sql("SELECT key FROM hh_sink").collect()
-        }
-    finally:
-        q.stop()
-    n = sum(len(w) for w in waves)
-    exact_heavy = {1, 2}  # 360 and 300 of 1560 rows; threshold 97.5
-    assert exact_heavy <= cand
-    # state boundedness: no single emission carries more than capacity
-    per = spark.sql(
-        "SELECT shard, COUNT(DISTINCT key) AS k FROM hh_sink GROUP BY shard"
-    ).collect()
-    assert all(r["k"] <= cap * 3 for r in per)  # ≤ capacity per batch emission
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream attribution join (view followed by click within
-    1 h, same user) must produce exactly the rows the identical
-    predicate yields on the static frames — and the watermark +
-    range condition must let the engine actually evict join state
-    (asserted via the state-operator metrics)."""
-    from data_engineer_challenge_spark.schemas import TESTDATA
-    from data_engineer_challenge_spark.streaming.joins import interval_join
-    from data_engineer_challenge_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    views_b = ev.where("event_type = 'view'").select("user_id", "ts", "event_id")
-    clicks_b = ev.where("event_type = 'click'").select(
-        "user_id", "ts", "event_id"
-    )
-    want = {
-        (r["l_event_id"], r["r_event_id"])
-        for r in interval_join(views_b, clicks_b, key="user_id").collect()
-    }
-    assert want  # fixture has attributable pairs
-
-    src = str(tmp_path / "ev_src")
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(TESTDATA["events"]).parquet(src)
-    views_s = stream.where("event_type = 'view'").select(
-        "user_id", "ts", "event_id"
-    )
-    clicks_s = stream.where("event_type = 'click'").select(
-        "user_id", "ts", "event_id"
-    )
-    q = (
-        interval_join(views_s, clicks_s, key="user_id")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ssj_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["l_event_id"], r["r_event_id"])
-            for r in spark.sql(
-                "SELECT l_event_id, r_event_id FROM ssj_sink"
-            ).collect()
-        }
-        stateful = [p for p in q.recentProgress if p["stateOperators"]]
-        assert stateful  # the join really carries watermarked state
-    finally:
-        q.stop()
-    assert got == want
-
-
-def test_stream_static_enrichment_matches_batch(spark, tmp_path):
-    from data_engineer_challenge_spark.schemas import TESTDATA
-    from data_engineer_challenge_spark.streaming.joins import enrich_with_dim
-    from data_engineer_challenge_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    dim = spark.createDataFrame(
-        [(i, f"seg{i % 3}") for i in range(0, 100, 2)],  # odd ids missing
-        "user_id long, segment string",
-    )
-    want = {
-        (r["event_id"], r["segment"])
-        for r in enrich_with_dim(ev, dim, "user_id")
-        .select("event_id", "segment")
-        .collect()
-    }
-    assert any(s is None for _, s in want)  # left join kept orphans
-
-    src = str(tmp_path / "enrich_src")
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(TESTDATA["events"]).parquet(src)
-    q = (
-        enrich_with_dim(stream, dim, "user_id")
-        .select("event_id", "segment")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("enrich_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            tuple(r)
-            for r in spark.sql("SELECT * FROM enrich_sink").collect()
-        }
-    finally:
-        q.stop()
-    assert got == want
-
-
-def test_enrich_with_dim_key_in_cols_and_empty_list(spark):
-    from data_engineer_challenge_spark.streaming.joins import enrich_with_dim
-    from data_engineer_challenge_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    dim = spark.createDataFrame(
-        [(1, "s1")], "user_id long, segment string"
-    )
-    # key listed in dim_cols must not create a duplicate column
-    out = enrich_with_dim(ev, dim, "user_id", dim_cols=["user_id", "segment"])
-    assert out.columns.count("user_id") == 1 and "segment" in out.columns
-    assert out.count() == ev.count()
-    # explicitly-empty dim_cols attaches nothing (not everything)
-    bare = enrich_with_dim(ev, dim, "user_id", dim_cols=[])
-    assert "segment" not in bare.columns
-
-
-def test_enrichment_picks_up_dim_refresh_between_batches(spark, tmp_path):
-    """Stream-static composition with the transactional dim: the
-    enrichment join re-resolves the SnapshotTable's CURRENT version
-    per micro-batch, so a dim replace between batches changes
-    enrichment from that batch on — no query restart."""
-    import time as _time
-
-    from data_engineer_challenge_spark.operators.snapshot import SnapshotTable
-    from data_engineer_challenge_spark.streaming.joins import enrich_with_dim
-
-    dim = SnapshotTable(spark, str(tmp_path / "dim"))
-    dim.append(
-        spark.createDataFrame([(7, "old-segment")], "user_id long, segment string")
-    )
-
-    schema = "event_id long, user_id long"
-    src = tmp_path / "esrc"
-    src.mkdir()
-    spark.createDataFrame([(1, 7)], schema).coalesce(1).write.parquet(
-        str(src / "w0")
-    )
-    _time.sleep(1.1)
-    spark.createDataFrame([(2, 7)], schema).coalesce(1).write.parquet(
-        str(src / "w1")
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*"))
-    )
-    seen = []
-
-    def enrich_batch(batch_df, batch_id):
-        out = enrich_with_dim(batch_df, dim.read(), "user_id")
-        seen.extend((r["event_id"], r["segment"]) for r in out.collect())
-        if batch_id == 0:
-            dim.replace(
-                spark.createDataFrame(
-                    [(7, "new-segment")], "user_id long, segment string"
-                )
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(enrich_batch)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert sorted(seen) == [(1, "old-segment"), (2, "new-segment")]
-
-
-def test_stream_stream_left_outer_interval_join(spark, tmp_path):
-    """Left-outer attribution (VERDICT r5 #3): an impression with no
-    click in its window must surface null-extended ONCE the watermark
-    proves the window closed; a window still open at end-of-stream is
-    withheld (a late click could still arrive). Stream output must
-    equal the batch left join restricted to closed windows, and the
-    join state must actually shrink (rows evicted on watermark)."""
-    import datetime as dt
-
-    from data_engineer_challenge_spark.streaming.joins import interval_join
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ts(h):
-        return t0 + dt.timedelta(hours=h)
-
-    schema = "user_id long, ts timestamp, event_id long"
-    # user 1: view matched by a click 30 min later
-    # user 2: view never clicked -> must surface (2, null) once closed
-    # user 3: view at +20h — window still open at end -> withheld
-    views = [
-        [(1, ts(0), 100), (2, ts(0), 200)],
-        [(3, ts(20), 300)],           # wave 2 pushes the watermark
-        [(9, ts(40), 900)],           # wave 3 forces the closing batch
-    ]
-    clicks = [
-        [(1, ts(0.5), 101)],
-        [(8, ts(20), 801)],           # watermark pusher on the right
-        [(8, ts(40), 802)],
-    ]
-    vdir, cdir = tmp_path / "views", tmp_path / "clicks"
-    for i, wave in enumerate(views):
-        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
-            str(vdir / f"w{i}")
-        )
-    for i, wave in enumerate(clicks):
-        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
-            str(cdir / f"w{i}")
-        )
-
-    from pyspark.sql.types import _parse_datatype_string
-
-    sch = _parse_datatype_string(schema)
-    views_s = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(vdir / "*"))
-    )
-    clicks_s = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(cdir / "*"))
-    )
-    q = (
-        interval_join(views_s, clicks_s, key="user_id", how="left_outer")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("loj_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["l_event_id"], r["r_event_id"])
-            for r in spark.sql(
-                "SELECT l_event_id, r_event_id FROM loj_sink"
-            ).collect()
-        }
-        stateful = [p for p in q.recentProgress if p["stateOperators"]]
-        assert stateful
-        removed = sum(
-            op.get("numRowsRemoved", 0)
-            for p in stateful
-            for op in p["stateOperators"]
-        )
-        assert removed > 0  # watermark really evicted buffered rows
-    finally:
-        q.stop()
-
-    # batch twin on the same frames, restricted to closed windows:
-    # final watermark = max event time (40h) - 2h delay = 38h; every
-    # view with ts + 1h < 38h is closed (users 1, 2, 3), the 40h
-    # pusher view (user 9) is still open and withheld
-    views_b = spark.createDataFrame(sum(views, []), schema)
-    clicks_b = spark.createDataFrame(sum(clicks, []), schema)
-    batch = interval_join(views_b, clicks_b, key="user_id", how="left_outer")
-    closed = batch.where("l_ts + INTERVAL 1 HOUR < timestamp'2024-01-02 14:00:00'")
-    want = {
-        (r["l_event_id"], r["r_event_id"]) for r in closed.collect()
-    }
-    assert want == {(100, 101), (200, None), (300, None)}
-    assert got == want
-
-
-def test_streaming_ivm_view_stays_fresh_and_exactly_once(spark, tmp_path):
-    """ingest_stream_ivm: the aggregate view is maintained per
-    micro-batch; a fresh-checkpoint replay of the whole stream (the
-    crashed-driver shape) commits nothing on either table; a source
-    delete between runs folds subtractively on the next tick."""
-    from pyspark.sql import functions as SF
-    from pyspark.sql import types as T
-
-    from data_engineer_challenge_spark.operators.ivm import IncrementalAgg
-    from data_engineer_challenge_spark.operators.snapshot import SnapshotTable
-    from data_engineer_challenge_spark.streaming.ingest import (
-        ingest_stream_ivm,
-    )
-
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.DoubleType())]
-    )
-    src_dir = str(tmp_path / "files")
-    spark.createDataFrame(
-        [(1, 1.0), (1, 2.0), (2, 5.0)], schema
-    ).coalesce(1).write.parquet(src_dir)
-    table = SnapshotTable(spark, str(tmp_path / "table"))
-    view = SnapshotTable(spark, str(tmp_path / "view"))
-    ivm = IncrementalAgg(
-        spark, table, view, group_cols=["k"], sum_cols=["v"], n_buckets=8
-    )
-
-    def check():
-        got = {
-            (r["k"], r["n_rows"], r["sum_v"])
-            for r in ivm.read_view().collect()
-        }
-        want = {
-            (r["k"], r["n_rows"], r["sum_v"])
-            for r in table.read()
-            .groupBy("k")
-            .agg(SF.count("*").alias("n_rows"), SF.sum("v").alias("sum_v"))
-            .collect()
-        }
-        assert got == want, (got, want)
-
-    ingest_stream_ivm(spark, src_dir, schema, table, ivm, str(tmp_path / "c0"))
-    check()
-    tv, vv = table.current_version(), view.current_version()
-
-    # fresh-checkpoint replay over the same files: both tables untouched
-    ingest_stream_ivm(spark, src_dir, schema, table, ivm, str(tmp_path / "c1"))
-    assert (table.current_version(), view.current_version()) == (tv, vv)
-
-    # out-of-band source delete + a new wave, resuming the ORIGINAL
-    # checkpoint (normal operation — txn ids are batch ids, so they
-    # are only meaningful within one checkpoint lineage): the next
-    # run's ticks fold the retraction AND the new rows
-    table.delete_where([("k", "=", 2)])
-    spark.createDataFrame([(3, 9.0)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    ingest_stream_ivm(spark, src_dir, schema, table, ivm, str(tmp_path / "c0"))
-    check()
-    got = {r["k"] for r in ivm.read_view().collect()}
-    assert got == {1, 3}  # group 2 retired subtractively
-
-
-def test_dedup_within_watermark_matches_batch(spark, tmp_path):
-    """Watermark-bounded streaming dedup: duplicates planted as exact
-    full-row copies in a SECOND file (so they arrive in a later
-    micro-batch) are suppressed, the surviving row set equals the
-    batch keyed dedup, and the query really carries a dedup state
-    operator (the bounded-state claim is in the metrics, not just the
-    rows)."""
-    from data_engineer_challenge_spark.schemas import TESTDATA
-    from data_engineer_challenge_spark.streaming.dedup import (
-        dedup_within_watermark,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "user_id", "event_type", "ts"
-    )
-    src = str(tmp_path / "dedup_src")
-    ev.coalesce(1).write.parquet(src)
-    # replayed subset: exact full-row copies => any kept row is
-    # byte-identical, so set equality against batch dedup is exact
-    ev.where("event_id % 7 = 0").coalesce(1).write.mode("append").parquet(src)
-
-    want = {
-        tuple(r)
-        for r in dedup_within_watermark(ev, ["event_id"]).collect()
-    }
-
-    stream = (
-        spark.readStream.schema(TESTDATA["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select("event_id", "user_id", "event_type", "ts")
-    )
-    q = (
-        dedup_within_watermark(stream, ["event_id"], watermark="365 days")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            tuple(r) for r in spark.sql("SELECT * FROM dedup_sink").collect()
-        }
-        stateful = [p for p in q.recentProgress if p["stateOperators"]]
-        assert stateful, "dedup must run through a state operator"
-        op_names = {
-            s.get("operatorName")
-            for p in stateful
-            for s in p["stateOperators"]
-        }
-        assert "dedupeWithinWatermark" in op_names
-    finally:
-        q.stop()
-    assert got == want and len(got) == ev.count()
-
-
-def test_streaming_sketch_rollup_exact_and_replay_proof(spark, tmp_path):
-    """The streaming distinct-sketch sink: events arrive one file per
-    micro-batch, each batch appends per-(type, day) sketches, and the
-    union over ALL sketch rows still equals the exact distinct count
-    (mergeability under arbitrary batch slicing — groups straddle
-    batches, so a group owns multiple sketch rows). Then the
-    idempotence wall: re-appending identical sketches under a FRESH
-    txn (simulating a replay that defeated the txn layer) must not
-    move a single estimate."""
-    import pyspark.sql.functions as SF
-
-    from data_engineer_challenge_spark.operators.sketches import (
-        build_distinct_sketches,
-        merge_distinct_estimate,
-    )
-    from data_engineer_challenge_spark.operators.snapshot import SnapshotTable
-    from data_engineer_challenge_spark.streaming.ingest import (
-        ingest_stream_distinct_sketches,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    shaped_cols = [
-        "event_type", SF.date_trunc("day", "ts").alias("day"), "user_id",
-    ]
-    # two files => two micro-batches; the second is an OVERLAPPING
-    # subset (an at-least-once redelivery): its groups end up owning
-    # two sketch rows each, which the union must absorb exactly
-    src = str(tmp_path / "sk_src")
-    for pred in ("true", "event_id % 3 = 0"):
-        ev.where(pred).select(*shaped_cols).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    tab = SnapshotTable(spark, str(tmp_path / "sk_tab"))
-    ingest_stream_distinct_sketches(
-        spark,
-        src,
-        ev.select(*shaped_cols).schema,
-        tab,
-        value_col="user_id",
-        group_cols=["event_type", "day"],
-        checkpoint_dir=str(tmp_path / "sk_ckpt"),
-        max_files_per_trigger=1,
-    )
-
-    def estimates():
-        return {
-            r["event_type"]: r["n_distinct"]
-            for r in merge_distinct_estimate(
-                tab.read(), ["event_type"]
-            ).collect()
-        }
-
-    exact = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type")
-        .agg(SF.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    est = estimates()
-    assert est == exact
-    # the redelivered subset's groups own TWO sketch rows each
-    n_groups = ev.select("event_type", SF.date_trunc("day", "ts")).distinct().count()
-    assert tab.read().count() > n_groups
-
-    # idempotence wall
-    tab.append(
-        build_distinct_sketches(
-            ev.select(*shaped_cols), "user_id", ["event_type", "day"]
-        ),
-        txn="rogue-replay",
-    )
-    assert estimates() == est
-
-
-def test_stream_stream_full_outer_interval_join(spark, tmp_path):
-    """Full-outer reconciliation: unmatched rows surface null-extended
-    from BOTH streams once the watermark proves their window closed —
-    unmatched views when ``l_ts + within`` passes, unmatched clicks
-    (the orphaned-click audit row left_outer silently drops) when
-    their own event time passes. Stream output must equal the batch
-    full join restricted to closed windows on the respective side."""
-    import datetime as dt
-
-    from data_engineer_challenge_spark.streaming.joins import interval_join
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ts(h):
-        return t0 + dt.timedelta(hours=h)
-
-    schema = "user_id long, ts timestamp, event_id long"
-    # user 1: matched pair; user 2: view never clicked; user 4: click
-    # never viewed (the row only full_outer surfaces); the +40h wave
-    # pushes the watermark far enough to close every earlier window
-    views = [
-        [(1, ts(0), 100), (2, ts(0), 200)],
-        [(9, ts(40), 900)],           # wave 2 pushes the watermark
-        [(9, ts(41), 901)],           # wave 3 forces the closing batch
-    ]
-    clicks = [
-        [(1, ts(0.5), 101), (4, ts(1), 401)],
-        [(8, ts(40), 801)],
-        [(8, ts(41), 802)],
-    ]
-    vdir, cdir = tmp_path / "views", tmp_path / "clicks"
-    for i, wave in enumerate(views):
-        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
-            str(vdir / f"w{i}")
-        )
-    for i, wave in enumerate(clicks):
-        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
-            str(cdir / f"w{i}")
-        )
-
-    from pyspark.sql.types import _parse_datatype_string
-
-    sch = _parse_datatype_string(schema)
-    views_s = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(vdir / "*"))
-    )
-    clicks_s = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(cdir / "*"))
-    )
-    q = (
-        interval_join(views_s, clicks_s, key="user_id", how="full_outer")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("foj_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["l_event_id"], r["r_event_id"])
-            for r in spark.sql(
-                "SELECT l_event_id, r_event_id FROM foj_sink"
-            ).collect()
-        }
-        stateful = [p for p in q.recentProgress if p["stateOperators"]]
-        assert stateful
-        # full-outer evictions leave the store by EMITTING the outer
-        # row, which Spark does not count in numRowsRemoved (unlike
-        # the left-outer path) — the observable eviction signal is
-        # the state total SHRINKING once the watermark passes
-        totals = [
-            op["numRowsTotal"]
-            for p in stateful
-            for op in p["stateOperators"]
-        ]
-        assert totals[-1] < max(totals)  # state really shrank
-    finally:
-        q.stop()
-
-    # batch twin: final watermark = 41h - 2h delay = 39h. Left rows
-    # close when l_ts + 1h < 39h; right rows close when r_ts < 39h.
-    # The 40/41h pushers on both sides are still open and withheld.
-    views_b = spark.createDataFrame(sum(views, []), schema)
-    clicks_b = spark.createDataFrame(sum(clicks, []), schema)
-    batch = interval_join(views_b, clicks_b, key="user_id", how="full_outer")
-    wm = "timestamp'2024-01-02 15:00:00'"
-    closed = batch.where(
-        f"(l_ts IS NOT NULL AND l_ts + INTERVAL 1 HOUR < {wm})"
-        f" OR (l_ts IS NULL AND r_ts < {wm})"
-    )
-    want = {
-        (r["l_event_id"], r["r_event_id"]) for r in closed.collect()
-    }
-    assert want == {(100, 101), (200, None), (None, 401)}
-    assert got == want
-
-
 def test_ingest_batch_passage_dedup_exactly_once(spark, tmp_path):
     """The passage-dedup ingest tick: cross-batch passages are cut at
     any alignment; replays no-op through the id guard (a replayed doc
@@ -1316,558 +585,6 @@ def test_ingest_batch_passage_dedup_exactly_once(spark, tmp_path):
     assert r3["tokens_cut"] >= 32
     t3 = wh.read("docs").where(F.col("doc_id") == 3).collect()[0]["text"]
     assert "q0" not in t3.split() and "three" in t3.split()
-
-
-# ------------------------------------------- end-to-end capstone (r7)
-
-
-def test_streaming_capstone_end_to_end_exactly_once(spark, tmp_path):
-    """VERDICT r6 #7 — the full streaming composition in ONE sequence:
-    WARC segment ingestion with passage dedup (warc_ingest_tick +
-    WindowHashIndex) -> clean-corpus staging (exact dedup + length
-    filter over the warehouse) -> continuously maintained IVM stats
-    view (ingest_stream_ivm), with the driver KILLED and restarted at
-    two different seams mid-sequence:
-
-    1. inside a WARC tick, after the batch landed but before the
-       offset commit (state.save raises) — the restarted tick re-sees
-       the segment and the id guard + keyed MERGE converge it;
-    2. inside the IVM stream's foreachBatch, after the source append
-       but before the view fold (ivm.tick raises) — the restarted
-       stream replays the batch, the txn record absorbs the re-append,
-       and the tick's durable cursor folds the missed version.
-
-    Every piece is individually crash-tested elsewhere; this test
-    proves the COMPOSITION is exactly-once: after all crashes the
-    warehouse equals the converged text, the stats source holds each
-    clean doc exactly once, and the view equals the static aggregate."""
-    import glob as globmod
-    import os
-    import shutil
-
-    from pyspark.sql import functions as SF
-    from pyspark.sql import types as T
-
-    from data_engineer_challenge_spark.operators.dedup import keep_first_dedup
-    from data_engineer_challenge_spark.operators.ivm import IncrementalAgg
-    from data_engineer_challenge_spark.operators.merge import ParquetWarehouse
-    from data_engineer_challenge_spark.operators.passage import WindowHashIndex
-    from data_engineer_challenge_spark.operators.snapshot import SnapshotTable
-    from data_engineer_challenge_spark.streaming.ingest import ingest_stream_ivm
-    from data_engineer_challenge_spark.streaming.snapshot_diff import SnapshotState
-    from data_engineer_challenge_spark.streaming.warc_ingest import warc_ingest_tick
-    from tests.test_web_sources import _html, _segment
-
-    warc_dir = tmp_path / "segments"
-    warc_dir.mkdir()
-    clean_src = str(tmp_path / "clean_src")
-    os.makedirs(clean_src)
-    boiler = " ".join(f"boiler{i}" for i in range(40))
-    unique_b = (
-        "a distinct article describing medieval bridge construction "
-        "techniques with stone arches keystones and wooden falsework "
-        "scaffolding over wide rivers in autumn"
-    )
-
-    def reopen():
-        """Everything the driver holds in memory, rebuilt from disk —
-        the restart."""
-        return (
-            SnapshotState.load(str(tmp_path / "offsets.json")),
-            ParquetWarehouse(spark, str(tmp_path / "wh")),
-            WindowHashIndex(spark, str(tmp_path / "pidx")),
-        )
-
-    def reopen_ivm():
-        table = SnapshotTable(spark, str(tmp_path / "stats_src"))
-        view = SnapshotTable(spark, str(tmp_path / "stats_view"))
-        ivm = IncrementalAgg(
-            spark, table, view, group_cols=["host"],
-            sum_cols=["n_tokens"], n_buckets=8,
-        )
-        return table, view, ivm
-
-    def clean_stage(docs):
-        """The clean-corpus stages over the warc-shaped warehouse
-        table: whitespace-normalized exact dedup (keep lowest doc_id)
-        + token-length filter + the host rollup key."""
-        norm = SF.trim(SF.regexp_replace(SF.lower("text"), r"\s+", " "))
-        scored = docs.select(
-            "doc_id",
-            "source",
-            SF.md5(norm.cast("binary")).alias("fp"),
-            SF.size(
-                SF.regexp_extract_all(SF.lower("text"), SF.lit("[a-z0-9]+"), 0)
-            ).cast("long").alias("n_tokens"),
-        )
-        kept = keep_first_dedup(scored, ["fp"], ["doc_id"])
-        return kept.filter(SF.col("n_tokens") >= 8).select(
-            "doc_id",
-            SF.regexp_extract("source", "//([^/]+)", 1).alias("host"),
-            "n_tokens",
-        )
-
-    def stage_clean_delta(wh):
-        """Stage ONLY the clean docs not yet staged, as flat parquet
-        files the stream source tracks. Crash-idempotent without
-        markers: a replay recomputes the delta against what already
-        reached clean_src, so each doc is staged at most once no
-        matter where a previous attempt died."""
-        cleaned = clean_stage(wh.read("web_docs"))
-        staged = globmod.glob(os.path.join(clean_src, "*.parquet"))
-        if staged:
-            prev = spark.read.parquet(*staged).select("doc_id")
-            cleaned = cleaned.join(prev, "doc_id", "left_anti")
-        if cleaned.count() == 0:
-            return
-        tmp = str(tmp_path / "stage_tmp")
-        cleaned.coalesce(1).write.mode("overwrite").parquet(tmp)
-        for f in globmod.glob(os.path.join(tmp, "part-*.parquet")):
-            shutil.move(f, os.path.join(clean_src, os.path.basename(f)))
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("n_tokens", T.LongType()),
-    ])
-
-    def run_stats_stream(table, ivm):
-        ingest_stream_ivm(
-            spark, clean_src, schema, table, ivm,
-            str(tmp_path / "ckpt"), txn_prefix="stats",
-        )
-
-    def check_invariants():
-        state, wh, pidx = reopen()
-        table, view, ivm = reopen_ivm()
-        # stats source holds each clean doc EXACTLY once
-        want = {
-            (r["doc_id"], r["host"], r["n_tokens"])
-            for r in clean_stage(wh.read("web_docs")).collect()
-        }
-        got_rows = table.read().collect()
-        got = {(r["doc_id"], r["host"], r["n_tokens"]) for r in got_rows}
-        assert got == want, (got, want)
-        assert len(got_rows) == len(want)  # no duplicate appends
-        # the maintained view equals the static aggregate
-        view_rows = {
-            (r["host"], r["n_rows"], r["sum_n_tokens"])
-            for r in ivm.read_view().collect()
-        }
-        static = {
-            (r["host"], r["n_rows"], r["sum_n_tokens"])
-            for r in table.read().groupBy("host").agg(
-                SF.count("*").alias("n_rows"),
-                SF.sum("n_tokens").alias("sum_n_tokens"),
-            ).collect()
-        }
-        assert view_rows == static, (view_rows, static)
-
-    # ---- phase 1: normal tick, stage, stream -------------------------
-    (warc_dir / "a.warc").write_bytes(_segment([
-        ("doc-a", "http://x.example/a", _html("lead words " + boiler + " tail")),
-        ("doc-b", "http://x.example/b", _html(unique_b)),
-    ]))
-    state, wh, pidx = reopen()
-    r1 = warc_ingest_tick(
-        spark, str(warc_dir), state, wh, "web_docs", passage_index=pidx
-    )
-    assert r1.fired and r1.docs_merged == 2
-    stage_clean_delta(wh)
-    table, view, ivm = reopen_ivm()
-    run_stats_stream(table, ivm)
-    check_invariants()
-
-    # ---- phase 2: tick CRASHES after landing, before offset commit ---
-    (warc_dir / "b.warc").write_bytes(_segment([
-        # boiler repeat -> passage index cuts it before the row lands
-        # the non-boiler remainder must clear the clean stage's
-        # 8-token length filter, or doc-c never reaches the stats
-        # stream and phase 3 has no batch to crash
-        ("doc-c", "http://y.example/c",
-         _html("three fresh lead tokens here in a longer piece "
-               + boiler + " with its own proper ending")),
-        # exact duplicate of doc-b -> clean stage drops it
-        ("doc-d", "http://y.example/d", _html(unique_b)),
-        # too short -> length filter drops it
-        ("doc-e", "http://y.example/e", _html("tiny page")),
-    ]))
-    state, wh, pidx = reopen()
-
-    def dead_save():
-        raise RuntimeError("driver killed before offset commit")
-
-    state.save = dead_save
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="offset commit"):
-        warc_ingest_tick(
-            spark, str(warc_dir), state, wh, "web_docs", passage_index=pidx
-        )
-
-    # restart: fresh objects from disk; the segment is re-seen and the
-    # replay converges (id guard stops self-matching; MERGE is keyed)
-    state, wh, pidx = reopen()
-    r2 = warc_ingest_tick(
-        spark, str(warc_dir), state, wh, "web_docs", passage_index=pidx
-    )
-    assert r2.fired and r2.segments == ("b.warc",)
-    rows = {r["doc_id"]: r["text"] for r in wh.read("web_docs").collect()}
-    assert "boiler0" in rows["<urn:uuid:doc-a>"].split()      # owner intact
-    assert "boiler0" not in rows["<urn:uuid:doc-c>"].split()  # repeat cut
-    assert "three" in rows["<urn:uuid:doc-c>"].split()
-
-    # ---- phase 3: IVM stream CRASHES between append and view fold ----
-    stage_clean_delta(wh)
-    table, view, ivm = reopen_ivm()
-    real_tick = ivm.tick
-
-    def dead_tick():
-        raise RuntimeError("driver killed before view fold")
-
-    ivm.tick = dead_tick
-    with _pytest.raises(Exception, match="view fold"):
-        run_stats_stream(table, ivm)
-    ivm.tick = real_tick
-
-    # restart the stream on the SAME checkpoint: the batch replays,
-    # the txn record absorbs the re-append, the cursor folds the
-    # missed version
-    table, view, ivm = reopen_ivm()
-    run_stats_stream(table, ivm)
-    check_invariants()
-    # doc-d (exact dup) and doc-e (too short) never reached the stats
-    # source; doc-c landed exactly once with the boiler cut
-    ids = {r["doc_id"] for r in reopen_ivm()[0].read().collect()}
-    assert ids == {
-        "<urn:uuid:doc-a>", "<urn:uuid:doc-b>", "<urn:uuid:doc-c>"
-    }
-
-    # ---- phase 4: one more NORMAL wave end to end after the crashes --
-    (warc_dir / "c.warc").write_bytes(_segment([
-        ("doc-f", "http://z.example/f",
-         _html("an entirely new final article about terraced rice "
-               "irrigation canals and bamboo aqueduct engineering")),
-    ]))
-    state, wh, pidx = reopen()
-    r3 = warc_ingest_tick(
-        spark, str(warc_dir), state, wh, "web_docs", passage_index=pidx
-    )
-    assert r3.fired and r3.docs_merged == 1
-    stage_clean_delta(wh)
-    table, view, ivm = reopen_ivm()
-    run_stats_stream(table, ivm)
-    check_invariants()
-    hosts = {
-        r["host"]: r["n_rows"] for r in reopen_ivm()[2].read_view().collect()
-    }
-    assert hosts == {"x.example": 2, "y.example": 1, "z.example": 1}
-
-
-def test_vector_index_tick_exactly_once_answers(spark, tmp_path):
-    """The embeddings drop-directory tick: new parquet drops append to
-    the persisted IVF index; a state-loss full reprocess re-appends
-    everything, yet probe answers are identical (per-candidate fold)
-    and compaction restores physical uniqueness."""
-    from pyspark.sql import functions as F
-
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.plans.ivf_centroids import CENTROIDS
-    from data_engineer_challenge_spark.streaming.ingest import (
-        vector_index_tick,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    # single-FILE drops (the mtime snapshot diff watches files, the
-    # realistic shape for an upstream embedding job's output)
-    emb.where("vec_id % 2 = 0").toPandas().to_parquet(
-        str(drops / "d0.parquet"), index=False
-    )
-    state = SnapshotState.load(str(tmp_path / "offsets.json"))
-    idx = IVFVectorIndex(spark, str(tmp_path / "ivf"), CENTROIDS)
-
-    r1 = vector_index_tick(spark, str(drops), state, idx)
-    assert r1["fired"] and r1["files"] == ("d0.parquet",)
-
-    # quiet tick
-    assert not vector_index_tick(spark, str(drops), state, idx)["fired"]
-
-    emb.where("vec_id % 2 = 1").toPandas().to_parquet(
-        str(drops / "d1.parquet"), index=False
-    )
-    r2 = vector_index_tick(spark, str(drops), state, idx)
-    assert r2["fired"] and r2["files"] == ("d1.parquet",)
-
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    want = [tuple(r) for r in idx.probe(queries, k=5, n_probe=2)
-            .orderBy("q_id", "rank").collect()]
-
-    # state loss: both drops reprocess; answers unchanged, and the
-    # tick's own compaction call eventually restores uniqueness
-    lost = SnapshotState.load(str(tmp_path / "fresh.json"))
-    r3 = vector_index_tick(spark, str(drops), lost, idx)
-    assert r3["fired"] and set(r3["files"]) == {"d0.parquet", "d1.parquet"}
-    got = [tuple(r) for r in idx.probe(queries, k=5, n_probe=2)
-           .orderBy("q_id", "rank").collect()]
-    assert got == want
-    assert idx.maybe_compact(max_files_per_list=0) >= 1
-    posts = spark.read.parquet(str(tmp_path / "ivf" / "postings"))
-    assert posts.count() == emb.count()
-    got2 = [tuple(r) for r in idx.probe(queries, k=5, n_probe=2)
-            .orderBy("q_id", "rank").collect()]
-    assert got2 == want
-
-
-def test_vector_index_tick_modified_drop_supersedes_stale_vectors(
-    spark, tmp_path
-):
-    """Regression (r8 ADVICE): a MODIFIED drop file is an update, not
-    a replay — before the ``latest/`` roster, the probe's per-candidate
-    max fold scored an updated id against BOTH its old and new vectors
-    (serving the stale one whenever it scored higher), and compaction
-    kept an arbitrary copy. Pin the fixed semantics: after a modify,
-    (1) a probe of the OLD vector's inverted list no longer returns
-    the id at all — even though the replacement re-assigned to a
-    different cid= list — (2) a probe of the NEW list scores the new
-    vector, (3) compaction physically reclaims the stale rows, and
-    (4) a state-loss reprocess of the modified file leaves answers
-    bit-identical."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.streaming.ingest import (
-        vector_index_tick,
-    )
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    d0 = drops / "d0.parquet"
-
-    def write_drop(rows):
-        pd.DataFrame(rows, columns=["vec_id", "embedding"]).to_parquet(
-            str(d0), index=False
-        )
-
-    # two orthogonal inverted lists; id 1 starts in list A (x-axis)
-    centroids = [[1.0, 0.0], [0.0, 1.0]]
-    write_drop([
-        (1, [1.0, 0.05]),
-        (2, [0.9, 0.1]),
-        (3, [0.05, 1.0]),
-    ])
-    state = SnapshotState.load(str(tmp_path / "offsets.json"))
-    idx = IVFVectorIndex(spark, str(tmp_path / "ivf"), centroids)
-    assert vector_index_tick(spark, str(drops), state, idx)["fired"]
-
-    q = spark.createDataFrame(
-        [(10, [1.0, 0.0]), (11, [0.0, 1.0])],
-        "q_id long, embedding array<double>",
-    )
-    before = {
-        (r["q_id"], r["c_id"]): round(r["cos_sim"], 6)
-        for r in idx.probe(q, k=3, n_probe=1).collect()
-    }
-    assert (10, 1) in before and (11, 1) not in before
-
-    # modify the drop: id 1's vector moves to list B's neighborhood
-    # (ids 2 and 3 unchanged — a partial re-embedding run)
-    write_drop([
-        (1, [0.02, 1.0]),
-        (2, [0.9, 0.1]),
-        (3, [0.05, 1.0]),
-    ])
-    os.utime(str(d0), ns=(time.time_ns(), time.time_ns()))
-    r = vector_index_tick(spark, str(drops), state, idx)
-    assert r["fired"] and r["files"] == ("d0.parquet",)
-
-    after = {
-        (r["q_id"], r["c_id"]): round(r["cos_sim"], 6)
-        for r in idx.probe(q, k=3, n_probe=1).collect()
-    }
-    # (1) stale row masked: the x-axis probe reads list A only, where
-    # id 1's old vector still physically sits — it must not surface
-    assert (10, 1) not in after
-    # (2) the y-axis probe scores the NEW vector
-    assert (11, 1) in after and after[(11, 1)] > 0.99
-    # unchanged ids keep their scores
-    assert after[(10, 2)] == before[(10, 2)]
-
-    # (3) compaction reclaims the stale cross-list row
-    assert idx.maybe_compact(max_files_per_list=0) >= 1
-    posts = spark.read.parquet(str(tmp_path / "ivf" / "postings"))
-    assert posts.count() == 3
-    assert {
-        (r["q_id"], r["c_id"]): round(r["cos_sim"], 6)
-        for r in idx.probe(q, k=3, n_probe=1).collect()
-    } == after
-
-    # (4) state loss: the modified file reprocesses as "new" with the
-    # same mtime ordinal — bit-identical rows, answers unchanged
-    lost = SnapshotState.load(str(tmp_path / "fresh.json"))
-    assert vector_index_tick(spark, str(drops), lost, idx)["fired"]
-    assert {
-        (r["q_id"], r["c_id"]): round(r["cos_sim"], 6)
-        for r in idx.probe(q, k=3, n_probe=1).collect()
-    } == after
-
-
-def test_vector_index_tick_deletion_drop_lists(spark, tmp_path):
-    """r9: the takedown flow — a second watched directory of deletion
-    lists. Pins: ids in a delete list vanish from probes after the
-    tick (ordinal = the list file's mtime_ns); a state-loss full
-    reprocess replays BOTH directories and converges (tombstones
-    no-op by value); a doc re-added at a later ordinal after its
-    takedown serves again; compaction reclaims removed rows."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.streaming.ingest import (
-        vector_index_tick,
-    )
-
-    drops = tmp_path / "drops"
-    dels = tmp_path / "deletes"
-    drops.mkdir()
-    dels.mkdir()
-    pd.DataFrame(
-        [(1, [1.0, 0.05]), (2, [0.9, 0.1]), (3, [0.05, 1.0])],
-        columns=["vec_id", "embedding"],
-    ).to_parquet(str(drops / "d0.parquet"), index=False)
-    state = SnapshotState.load(str(tmp_path / "offsets.json"))
-    idx = IVFVectorIndex(
-        spark, str(tmp_path / "ivf"), [[1.0, 0.0], [0.0, 1.0]]
-    )
-    r1 = vector_index_tick(
-        spark, str(drops), state, idx, delete_dir=str(dels)
-    )
-    assert r1["fired"] and r1["deleted"] == 0
-
-    q = spark.createDataFrame(
-        [(10, [1.0, 0.0]), (11, [0.0, 1.0])],
-        "q_id long, embedding array<double>",
-    )
-
-    def served():
-        return {
-            r["c_id"] for r in idx.probe(q, k=3, n_probe=2).collect()
-        }
-
-    assert served() == {1, 2, 3}
-
-    # takedown list arrives; quiet drop dir
-    import time as _time
-
-    _time.sleep(0.01)
-    pd.DataFrame([(2,)], columns=["vec_id"]).to_parquet(
-        str(dels / "takedown-0.parquet"), index=False
-    )
-    r2 = vector_index_tick(
-        spark, str(drops), state, idx, delete_dir=str(dels)
-    )
-    assert r2["fired"] and r2["deleted"] == 1 and r2["vectors"] == 0
-    assert served() == {1, 3}
-
-    # state loss: both directories fully reprocess; answers unchanged
-    lost = SnapshotState.load(str(tmp_path / "fresh.json"))
-    r3 = vector_index_tick(
-        spark, str(drops), lost, idx, delete_dir=str(dels)
-    )
-    assert r3["fired"] and set(r3["delete_files"]) == {
-        "takedown-0.parquet"
-    }
-    assert served() == {1, 3}
-
-    # compaction reclaims; the store physically forgets the id
-    idx.maybe_compact(max_files_per_list=0)
-    posts = spark.read.option("mergeSchema", "true").parquet(
-        str(tmp_path / "ivf" / "postings")
-    )
-    assert {r["vec_id"] for r in posts.select("vec_id").collect()} == {1, 3}
-
-    # re-add later (modified drop => supersede at a newer mtime):
-    # the id serves again — takedown is an ordering fact, not a ban
-    _time.sleep(0.01)
-    pd.DataFrame(
-        [(1, [1.0, 0.05]), (2, [0.88, 0.12]), (3, [0.05, 1.0])],
-        columns=["vec_id", "embedding"],
-    ).to_parquet(str(drops / "d0.parquet"), index=False)
-    import os as _os
-
-    now = _time.time_ns()
-    _os.utime(str(drops / "d0.parquet"), ns=(now, now))
-    r4 = vector_index_tick(
-        spark, str(drops), state, idx, delete_dir=str(dels)
-    )
-    assert r4["fired"] and r4["vectors"] == 3
-    assert served() == {1, 2, 3}
-
-
-def test_curation_refresh_tick(spark, tmp_path):
-    """The continuous-curation loop's selection step (r9): each
-    refresh runs the batch funnel over the warehouse's CURRENT corpus
-    and commits the mix as a SnapshotTable version. Pins: (1) the
-    committed selection equals the funnel run directly on the same
-    corpus; (2) a replayed refresh txn is a silent no-op (one version,
-    not two); (3) after the corpus grows, a new refresh commits a new
-    version while TIME TRAVEL still reproduces the old mix exactly —
-    the auditable training-data lineage claim."""
-    from data_engineer_challenge_spark.operators.merge import (
-        ParquetWarehouse,
-    )
-    from data_engineer_challenge_spark.operators.snapshot import (
-        SnapshotTable,
-    )
-    from data_engineer_challenge_spark.plans.text import curation_funnel
-    from data_engineer_challenge_spark.streaming.ingest import (
-        curation_refresh_tick,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    wh.merge_upsert("docs", docs.where("doc_id < 300"), ["doc_id"])
-    sel = SnapshotTable(spark, str(tmp_path / "selection"))
-
-    r1 = curation_refresh_tick(spark, wh, "docs", sel, txn="curate-1")
-    assert r1["version"] is not None and r1["selected"] > 0
-    want1 = sorted(
-        map(tuple, curation_funnel(wh.read("docs")).collect())
-    )
-    assert sorted(map(tuple, sel.read().collect())) == want1
-
-    # (2) replayed refresh: no new version
-    r2 = curation_refresh_tick(spark, wh, "docs", sel, txn="curate-1")
-    assert r2["version"] is None
-    assert sel.current_version() == r1["version"]
-
-    # (3) corpus grows; a fresh refresh commits a NEW version and the
-    # old mix stays readable at its version
-    wh.merge_upsert("docs", docs.where("doc_id >= 300"), ["doc_id"])
-    r3 = curation_refresh_tick(spark, wh, "docs", sel, txn="curate-2")
-    assert r3["version"] == r1["version"] + 1
-    want2 = sorted(
-        map(tuple, curation_funnel(wh.read("docs")).collect())
-    )
-    assert sorted(map(tuple, sel.read().collect())) == want2
-    assert want2 != want1  # the mix genuinely moved with the corpus
-    assert sorted(
-        map(tuple, sel.read(version=r1["version"]).collect())
-    ) == want1
 
 
 def test_curation_refresh_delta_tick(spark, tmp_path):
@@ -2318,9 +1035,9 @@ def test_curation_refresh_delta_randomized_ops(spark, tmp_path):
 
 
 def test_crawl_to_mix_fully_incremental(spark, tmp_path):
-    """r10 capstone: the continuous pipeline is now incremental END TO
-    END — raw drops → change-feed dedup ingest
-    (:func:`refresh_from_changes`) → delta-aware curation refresh over
+    """r10 capstone: the continuous pipeline is incremental END TO END —
+    raw drops → change-feed dedup ingest (the raw table's change feed,
+    probed against a MinHashIndex) → delta-aware curation refresh over
     the clean corpus → committed training mix. Pins: each refresh's
     mix is bit-identical to the batch funnel over clean's CURRENT
     state; the second tick scores only the second wave's dedup
@@ -2328,6 +1045,8 @@ def test_crawl_to_mix_fully_incremental(spark, tmp_path):
     (clean.delete_where) propagates into the next mix while scoring
     NOTHING (carried survivors skipped) — the right-to-erasure flow
     reaching the training mix itself."""
+    from pyspark.sql import functions as F
+
     from data_engineer_challenge_spark.operators.dedup_index import (
         MinHashIndex,
     )
@@ -2337,7 +1056,6 @@ def test_crawl_to_mix_fully_incremental(spark, tmp_path):
     from data_engineer_challenge_spark.plans.text import curation_funnel
     from data_engineer_challenge_spark.streaming.ingest import (
         curation_refresh_delta_tick,
-        refresh_from_changes,
     )
     from data_engineer_challenge_spark.tables import load_table
 
@@ -2351,6 +1069,16 @@ def test_crawl_to_mix_fully_incremental(spark, tmp_path):
     sel = SnapshotTable(spark, str(tmp_path / "sel"))
     state = str(tmp_path / "state")
 
+    def ingest_changes(since):
+        """Append raw's rows committed after version ``since`` to
+        clean, minus near-duplicates of what clean already holds."""
+        fresh = raw.read_changes(since, raw.current_version())
+        dups = idx.probe(fresh).select(F.col("new_id").alias("doc_id"))
+        fresh = fresh.join(dups, "doc_id", "left_anti").localCheckpoint()
+        clean.append(fresh)
+        idx.append(fresh)
+        idx.release()
+
     def mix_matches_clean():
         full = curation_funnel(clean.read())
         assert sorted(map(tuple, sel.read().collect())) == sorted(
@@ -2359,7 +1087,7 @@ def test_crawl_to_mix_fully_incremental(spark, tmp_path):
 
     # wave 1: crawl lands, dedup-ingests, the first refresh scores all
     raw.append(docs.where("doc_id < 150"), txn="crawl-1")
-    assert refresh_from_changes(spark, raw, clean, idx) is not None
+    ingest_changes(-1)
     r1 = curation_refresh_delta_tick(spark, clean, sel, state)
     assert r1["docs_scored"] == clean.read().count()
     mix_matches_clean()
@@ -2373,9 +1101,10 @@ def test_crawl_to_mix_fully_incremental(spark, tmp_path):
             "doc_id long, lang string, text string",
         )
     )
+    v1 = raw.current_version()
     raw.append(wave2, txn="crawl-2")
     n_before = clean.read().count()
-    assert refresh_from_changes(spark, raw, clean, idx) is not None
+    ingest_changes(v1)
     survivors = clean.read().count() - n_before
     clean_ids = {
         r["doc_id"] for r in clean.read().select("doc_id").collect()
@@ -2388,8 +1117,6 @@ def test_crawl_to_mix_fully_incremental(spark, tmp_path):
 
     # takedown: erase a document from clean; the next refresh scores
     # NOTHING (the rewrite's carried rows skip) yet the mix drops it
-    from pyspark.sql import functions as F
-
     victim = sel.read().orderBy(F.desc("log_weight")).first()["doc_id"]
     clean.delete_where([("doc_id", "=", int(victim))])
     r3 = curation_refresh_delta_tick(spark, clean, sel, state)
@@ -2398,207 +1125,6 @@ def test_crawl_to_mix_fully_incremental(spark, tmp_path):
         r["doc_id"] for r in sel.read().select("doc_id").collect()
     }
     mix_matches_clean()
-
-
-def test_vector_index_tick_ordinal_interleaving(spark, tmp_path):
-    """r9 ADVICE (medium): adds and deletes must APPLY in ascending
-    ordinal order across both watched directories. The wedge case: a
-    takedown list with an OLDER mtime_ns than a same-tick supersede
-    re-add of the same id — the old all-adds-then-all-deletes order
-    made delete() see an out-ranked first-time tombstone mid-tick and
-    abort before state.commit, so every retry re-wedged (and
-    re-appended duplicate supersede rows). Pins: the tick applies
-    ordinal order (delete first, then the newer re-add wins), commits,
-    and a state-loss replay converges on the same answers. Also pins
-    the add-only flavor: two modified files superseding one id whose
-    FILENAME order opposes mtime order."""
-    import os as _os
-    import time as _time
-
-    import pandas as pd
-
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.streaming.ingest import (
-        vector_index_tick,
-    )
-
-    drops = tmp_path / "drops"
-    dels = tmp_path / "deletes"
-    drops.mkdir()
-    dels.mkdir()
-    pd.DataFrame(
-        [(1, [1.0, 0.05]), (2, [0.9, 0.1]), (3, [0.05, 1.0])],
-        columns=["vec_id", "embedding"],
-    ).to_parquet(str(drops / "d0.parquet"), index=False)
-    state = SnapshotState.load(str(tmp_path / "offsets.json"))
-    idx = IVFVectorIndex(
-        spark, str(tmp_path / "ivf"), [[1.0, 0.0], [0.0, 1.0]]
-    )
-    assert vector_index_tick(
-        spark, str(drops), state, idx, delete_dir=str(dels)
-    )["fired"]
-
-    q = spark.createDataFrame(
-        [(10, [1.0, 0.0]), (11, [0.0, 1.0])],
-        "q_id long, embedding array<double>",
-    )
-
-    def scores():
-        return {
-            (r["q_id"], r["c_id"]): r["cos_sim"]
-            for r in idx.probe(q, k=3, n_probe=2).collect()
-        }
-
-    # same tick: takedown of id 2 stamped OLDER than the supersede
-    # re-add of id 2 (filename sort also runs adds before deletes —
-    # only ordinal order makes this land correctly)
-    now = _time.time_ns()
-    pd.DataFrame([(2,)], columns=["vec_id"]).to_parquet(
-        str(dels / "takedown.parquet"), index=False
-    )
-    _os.utime(str(dels / "takedown.parquet"), ns=(now, now))
-    pd.DataFrame(
-        [(1, [1.0, 0.05]), (2, [0.05, 0.98]), (3, [0.05, 1.0])],
-        columns=["vec_id", "embedding"],
-    ).to_parquet(str(drops / "d0.parquet"), index=False)
-    _os.utime(str(drops / "d0.parquet"), ns=(now + 10_000, now + 10_000))
-
-    r = vector_index_tick(
-        spark, str(drops), state, idx, delete_dir=str(dels)
-    )
-    assert r["fired"] and r["deleted"] == 1 and r["vectors"] == 3
-    after = scores()
-    # the re-add (newer ordinal) out-ranks the takedown: id 2 serves
-    # its NEW vector; the old x-axis vector is gone
-    assert after[(11, 2)] > 0.9
-    assert after.get((10, 2), 0.0) < 0.2  # old x-axis vector is gone
-
-    # state-loss replay walks the same ordinal order and converges
-    lost = SnapshotState.load(str(tmp_path / "fresh.json"))
-    r2 = vector_index_tick(
-        spark, str(drops), lost, idx, delete_dir=str(dels)
-    )
-    assert r2["fired"]
-    assert {k: round(v, 6) for k, v in scores().items()} == {
-        k: round(v, 6) for k, v in after.items()
-    }
-
-    # add-only flavor: two files re-modified in one tick window, both
-    # superseding id 9; the name order ("a-" before "b-") OPPOSES the
-    # mtime order — ordinal application must let b-old land first and
-    # a-new win, where filename order tripped append()'s regression
-    # guard instead
-    for name, vec, ts in (
-        ("a-new.parquet", [0.1, 0.97], now + 40_000),
-        ("b-old.parquet", [0.97, 0.1], now + 30_000),
-    ):
-        pd.DataFrame(
-            [(9, vec)], columns=["vec_id", "embedding"]
-        ).to_parquet(str(drops / name), index=False)
-        _os.utime(str(drops / name), ns=(ts, ts))
-    assert vector_index_tick(
-        spark, str(drops), state, idx, delete_dir=str(dels)
-    )["fired"]
-    # both were NEW files (plain appends); now re-modify both so they
-    # take the supersede path with the adversarial name/mtime order
-    for name, vec, ts in (
-        ("a-new.parquet", [0.0, 1.0], now + 80_000),
-        ("b-old.parquet", [1.0, 0.0], now + 60_000),
-    ):
-        pd.DataFrame(
-            [(9, vec)], columns=["vec_id", "embedding"]
-        ).to_parquet(str(drops / name), index=False)
-        _os.utime(str(drops / name), ns=(ts, ts))
-    r3 = vector_index_tick(
-        spark, str(drops), state, idx, delete_dir=str(dels)
-    )
-    assert r3["fired"] and r3["vectors"] == 2
-    final = scores()
-    assert final[(11, 9)] > 0.99  # a-new (highest mtime) serves
-
-
-def test_vector_index_tick_growth_rebucket(spark, tmp_path, monkeypatch):
-    """VERDICT r8 #2, the tick-level contract: a store built small and
-    grown past the (monkeypatched) threshold ACROSS TICKS retrains its
-    quantizer k ∝ N inside the tick, per-list size comes back to the
-    target, full-width probe answers are identical (no row lost), and
-    the NEXT tick keeps appending into the new layout."""
-    from pyspark.sql import functions as F
-
-    from data_engineer_challenge_spark.operators import ann_index
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.plans.ivf_centroids import CENTROIDS
-    from data_engineer_challenge_spark.streaming.ingest import (
-        vector_index_tick,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    monkeypatch.setattr(ann_index, "IVF_AUTO_MIN_N", 200)
-    monkeypatch.setattr(ann_index, "IVF_TARGET_LIST_SIZE", 25)
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    emb.where("vec_id < 80").toPandas().to_parquet(
-        str(drops / "d0.parquet"), index=False
-    )
-    state = SnapshotState.load(str(tmp_path / "offsets.json"))
-    small = [list(c) for c in CENTROIDS[:2]]
-    idx = IVFVectorIndex(spark, str(tmp_path / "ivf"), small)
-
-    r1 = vector_index_tick(spark, str(drops), state, idx)
-    assert r1["fired"] and r1["rebucketed"] is False  # under min_n
-
-    emb.where("vec_id >= 80 and vec_id < 300").toPandas().to_parquet(
-        str(drops / "d1.parquet"), index=False
-    )
-    r2 = vector_index_tick(spark, str(drops), state, idx)
-    # 300 rows ≥ 200 and mean list 150 > 2×25 → the tick rebuckets
-    assert r2["fired"] and r2["rebucketed"] is True
-    assert idx.meta["k"] == 12  # ceil(300 / 25)
-
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    full_before = [
-        tuple(r)
-        for r in idx.probe(queries, k=5, n_probe=idx.meta["k"])
-        .orderBy("q_id", "rank")
-        .collect()
-    ]
-
-    # next tick appends into the NEW layout without complaint
-    emb.where("vec_id >= 300").toPandas().to_parquet(
-        str(drops / "d2.parquet"), index=False
-    )
-    r3 = vector_index_tick(spark, str(drops), state, idx)
-    assert r3["fired"]
-    posts = spark.read.option("mergeSchema", "true").parquet(
-        str(tmp_path / "ivf" / "postings")
-    )
-    assert posts.count() == 500
-    sizes = posts.groupBy("cid").count().collect()
-    assert sum(r["count"] for r in sizes) / len(sizes) <= 2 * 25 + 20
-    # the pre-growth rows still answer exactly under the new layout
-    full_after = [
-        tuple(r)
-        for r in idx.probe(
-            queries.where("q_id < 300"), k=5, n_probe=idx.meta["k"]
-        )
-        .orderBy("q_id", "rank")
-        .collect()
-    ]
-    # rank-5 lists over a larger corpus can shift; compare rank-1
-    # self-hits, the exactness witness that survives corpus growth
-    before_r1 = {
-        t[0]: t[1] for t in full_before if t[3] == 1 and t[0] < 300
-    }
-    assert before_r1
-    assert {t[0]: t[1] for t in full_after if t[3] == 1} == before_r1
 
 
 def test_writer_lock_second_process_fails_fast(spark, tmp_path):
@@ -2690,55 +1216,3 @@ def test_probe_interleaved_with_compaction(spark, tmp_path):
     assert got == want
 
 
-def test_vector_tick_reselects_serving_after_rebucket(
-    spark, tmp_path, monkeypatch
-):
-    """r13 (VERDICT r12 #3): when a tick's growth triggers a rebucket
-    and a recall_target is configured, the tick re-runs the held-out
-    sweep against the NEW quantizer and persists the measured widths
-    — the serving hint can no longer silently drift while the store
-    doubles. Quiet-growth ticks skip the sweep (serving is None)."""
-    from data_engineer_challenge_spark.operators import ann_index
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.plans.ivf_centroids import CENTROIDS
-    from data_engineer_challenge_spark.streaming.ingest import (
-        vector_index_tick,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    monkeypatch.setattr(ann_index, "IVF_AUTO_MIN_N", 200)
-    monkeypatch.setattr(ann_index, "IVF_TARGET_LIST_SIZE", 25)
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    emb.where("vec_id < 80").toPandas().to_parquet(
-        str(drops / "d0.parquet"), index=False
-    )
-    state = SnapshotState.load(str(tmp_path / "offsets.json"))
-    path = str(tmp_path / "ivf")
-    idx = IVFVectorIndex(spark, path, [list(c) for c in CENTROIDS[:2]])
-
-    r1 = vector_index_tick(
-        spark, str(drops), state, idx, recall_target=0.9
-    )
-    assert r1["fired"] and not r1["rebucketed"]
-    assert r1["serving"] is None  # no growth event: no sweep cost
-
-    emb.where("vec_id >= 80").toPandas().to_parquet(
-        str(drops / "d1.parquet"), index=False
-    )
-    r2 = vector_index_tick(
-        spark, str(drops), state, idx, recall_target=0.9
-    )
-    assert r2["fired"] and r2["rebucketed"]
-    assert r2["serving"] is not None
-    assert r2["serving"]["recall"] >= 0.9
-    assert idx.n_probe_hint == r2["serving"]["n_probe"]
-    # the persisted hint survives a fresh open
-    assert (
-        IVFVectorIndex.open(spark, path).n_probe_hint
-        == r2["serving"]["n_probe"]
-    )

@@ -3742,100 +3742,6 @@ def test_compaction_budget_bounds_per_tick_folds(spark, tmp_path):
     assert got2 == want
 
 
-def test_reselect_serving_after_rebucket(spark, tmp_path, monkeypatch):
-    """r13 (VERDICT r12 #3): a rebucketed store kept serving its
-    build-time n_probe hint while recall silently drifted (0.656 at
-    the end of the r12 21-tick walk). reselect_serving re-runs the
-    held-out sweep against the CURRENT quantizer over the LIVE rows,
-    returns the recall MEASURED at the chosen width, and persists the
-    hint so open()/open_local() serve it."""
-    import json as _json
-    import os as _os
-
-    from data_engineer_challenge_spark.operators import ann_index
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.plans.ivf_centroids import CENTROIDS
-    from data_engineer_challenge_spark.tables import load_table
-
-    monkeypatch.setattr(ann_index, "IVF_AUTO_MIN_N", 200)
-    monkeypatch.setattr(ann_index, "IVF_TARGET_LIST_SIZE", 25)
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    path = str(tmp_path / "ivf")
-    idx = IVFVectorIndex(spark, path, [list(c) for c in CENTROIDS[:2]])
-    idx.build(emb.where("vec_id < 80"))
-    idx.append(emb.where("vec_id >= 80"))
-    assert idx.maybe_rebucket() is True
-    stale_hint = idx.n_probe_hint  # the fraction rule, unmeasured
-
-    res = idx.reselect_serving(0.9)
-    # the receipt: measured recall at the chosen width meets the
-    # target unless even full-width probing cannot (it can here —
-    # probing every list IS exact search on a raw store)
-    assert res["recall"] >= 0.9
-    assert 1 <= res["n_probe"] <= idx.meta["k"]
-    assert res["adc_shortlist"] is None  # raw store: no coded width
-    assert idx.n_probe_hint == res["n_probe"]
-
-    # persisted: the quantizer file carries the hint...
-    qf = _os.path.join(
-        path, "meta", f"quantizer-{idx.meta['centroids_md5']}.json"
-    )
-    with open(qf) as f:
-        quant = _json.load(f)
-    assert quant["n_probe"] == res["n_probe"]
-    assert quant["centroids"] == idx.centroids  # untouched
-    # ...and BOTH reopen paths serve it
-    assert IVFVectorIndex.open(spark, path).n_probe_hint == res["n_probe"]
-    assert IVFVectorIndex.open_local(path).n_probe_hint == res["n_probe"]
-    del stale_hint
-
-
-def test_reselect_serving_coded_store_persists_adc_width(
-    spark, tmp_path, monkeypatch
-):
-    """Coded stores also re-select the ADC shortlist width: the
-    quantizer file gains adc_shortlist and open()/open_local()
-    restore it as adc_shortlist_hint."""
-    import json as _json
-    import os as _os
-
-    from data_engineer_challenge_spark.operators.ann_index import (
-        IVFVectorIndex,
-    )
-    from data_engineer_challenge_spark.plans.ivf_centroids import CENTROIDS
-    from data_engineer_challenge_spark.plans.pq_codebooks import (
-        CODEBOOKS,
-    )
-    from data_engineer_challenge_spark.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    path = str(tmp_path / "ivfpq")
-    idx = IVFVectorIndex(
-        spark, path, [list(c) for c in CENTROIDS],
-        pq_codebooks=CODEBOOKS,
-    )
-    idx.build(emb)
-    res = idx.reselect_serving(0.8)
-    assert res["adc_shortlist"] is not None and res["adc_shortlist"] >= 10
-    assert idx.adc_shortlist_hint == res["adc_shortlist"]
-    qf = _os.path.join(
-        path, "meta", f"quantizer-{idx.meta['centroids_md5']}.json"
-    )
-    with open(qf) as f:
-        quant = _json.load(f)
-    assert quant["adc_shortlist"] == res["adc_shortlist"]
-    ro = IVFVectorIndex.open(spark, path)
-    assert ro.adc_shortlist_hint == res["adc_shortlist"]
-    assert ro.n_probe_hint == res["n_probe"]
-    assert (
-        IVFVectorIndex.open_local(path).adc_shortlist_hint
-        == res["adc_shortlist"]
-    )
-
-
 def test_serve_query_cli_text_mode_sparkless(spark, tmp_path):
     """The CLI's --terms mode (r13, VERDICT r12 #4) answers a BM25
     query from a persisted InvertedTextIndex in a subprocess that

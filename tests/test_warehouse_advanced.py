@@ -1,5 +1,4 @@
-"""Warehouse MERGE paths, exactly-once streaming ingest, and custom
-stateful streaming operators."""
+"""Warehouse MERGE paths."""
 
 from __future__ import annotations
 
@@ -8,10 +7,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from data_engineer_challenge_spark.operators.merge import ParquetWarehouse
-from data_engineer_challenge_spark.schemas import TESTDATA
-from data_engineer_challenge_spark.streaming.ingest import ingest_stream
-from data_engineer_challenge_spark.streaming.stateful import running_user_totals
-from data_engineer_challenge_spark.tables import load_table
 
 
 def _file_hashes(root):
@@ -404,89 +399,6 @@ def test_partitioned_merge_key_mismatch_raises(spark, tmp_path):
     assert wh._meta("t")["partition_keys"] == ["k"]
 
 
-def test_exactly_once_stream_ingest(spark, tmp_path):
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "src")
-    first = events.filter(F.col("event_id") < 500)
-    first.write.parquet(src)
-
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-    ingest_stream(spark, src, TESTDATA["events"], wh, "EVENTS", ["event_id"], ckpt)
-    n1 = wh.read("EVENTS").count()
-    assert n1 == first.count()
-
-    # second wave of files, including replayed overlap → no duplicates
-    events.filter(F.col("event_id") >= 400).write.mode("append").parquet(src)
-    ingest_stream(spark, src, TESTDATA["events"], wh, "EVENTS", ["event_id"], ckpt)
-    assert wh.read("EVENTS").count() == events.count()
-    assert wh.read("EVENTS").select("event_id").distinct().count() == events.count()
-
-
-def test_exactly_once_stream_ingest_into_partitioned_table(spark, tmp_path):
-    """The streaming path rides the pruned MERGE automatically when the
-    target table has the key-hash layout: a second micro-batch touching
-    a subset of keys must leave untouched partition files byte-identical
-    AND keep exactly-once semantics across the checkpoint replay."""
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "src")
-    events.filter(F.col("event_id") < 800).write.parquet(src)
-
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    # pre-create the partitioned layout (e.g. from a backfill)
-    wh.overwrite_partitioned(
-        "EVENTS", events.filter(F.col("event_id") < 500), ["event_id"], n_buckets=8
-    )
-
-    ckpt = str(tmp_path / "ckpt")
-    ingest_stream(spark, src, TESTDATA["events"], wh, "EVENTS", ["event_id"], ckpt)
-    assert wh.read("EVENTS").count() == 800
-
-    # replayed overlap → no duplicates (exactly-once)
-    events.filter(F.col("event_id") >= 700).write.mode("append").parquet(src)
-    ingest_stream(spark, src, TESTDATA["events"], wh, "EVENTS", ["event_id"], ckpt)
-    assert wh.read("EVENTS").count() == events.count()
-
-    # the layout survived the streaming merges (still partition dirs)
-    after = _file_hashes(wh.path("EVENTS"))
-    assert any(p.startswith("__pkey=") for p in after)
-
-
-def test_stateful_running_totals(spark, tmp_path):
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "src")
-    events.write.parquet(src)
-    stream = spark.readStream.schema(TESTDATA["events"]).parquet(src)
-
-    q = (
-        running_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_totals")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r["user_id"]: (r["total_events"], r["total_value"])
-            for r in spark.sql(
-                "SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY total_events DESC) rn FROM user_totals) WHERE rn = 1"
-            ).collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        r["user_id"]: (r["n"], r["v"])
-        for r in events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for u in want:
-        assert got[u][0] == want[u][0]
-        assert abs(got[u][1] - want[u][1]) < 1e-6
-
-
 def test_pruned_merge_parked_partition_recovers(spark, tmp_path):
     """A crash between 'park old partition dir' and 'rename new dir in'
     leaves ``.old-__pkey=N`` with no live ``__pkey=N`` — the previous
@@ -534,193 +446,6 @@ def test_pruned_merge_parked_partition_recovers(spark, tmp_path):
         e.startswith(".old-") for e in os.listdir(wh.path("t"))
     )
     assert sorted((r["k"], r["v"]) for r in wh.read("t").collect()) == got
-
-
-def test_streaming_ingest_with_cross_batch_neardup_dedup(spark, tmp_path):
-    """Two streaming waves of documents: wave 2 contains an exact copy
-    and a near-dup of wave-1 content (under DIFFERENT doc_ids, so keyed
-    MERGE alone cannot catch them) plus one genuinely new doc. The
-    index-backed ingest must land wave 1 in full, drop both cross-batch
-    duplicates, and admit the fresh doc."""
-    from pyspark.sql import types as T
-
-    from data_engineer_challenge_spark.operators.dedup_index import MinHashIndex
-    from data_engineer_challenge_spark.streaming.ingest import (
-        ingest_documents_deduped,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    wave1 = docs.limit(20)
-    base = {r["doc_id"]: r["text"] for r in wave1.limit(2).collect()}
-    (k0, t0), (k1, t1) = list(base.items())[:2]
-
-    src = str(tmp_path / "src")
-    wave1.write.parquet(src)
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), threshold=0.8)
-    idx.build(spark.createDataFrame([], schema))  # empty index to start
-    ckpt = str(tmp_path / "ckpt")
-
-    ingest_documents_deduped(
-        spark, src, schema, wh, "DOCS", idx, ckpt
-    )
-    n1 = wh.read("DOCS").count()
-    assert n1 == wave1.count()
-
-    wave2 = spark.createDataFrame(
-        [
-            (900001, t0),                       # exact copy, new id
-            (900002, t1.rsplit(" ", 1)[0] + " zzz"),  # near-dup, new id
-            (900003, "genuinely novel material " * 25),
-        ],
-        schema,
-    )
-    wave2.write.mode("append").parquet(src)
-    ingest_documents_deduped(
-        spark, src, schema, wh, "DOCS", idx, ckpt
-    )
-    final = {r["doc_id"] for r in wh.read("DOCS").select("doc_id").collect()}
-    assert 900003 in final
-    assert 900001 not in final and 900002 not in final
-    assert len(final) == n1 + 1
-
-
-def test_deduped_ingest_replay_converges(spark, tmp_path):
-    """The dedup-ingest exactly-once claim: re-executing a batch (the
-    crash-between-sink-and-checkpoint case) must not change the
-    warehouse — the keyed MERGE absorbs the rows, and the index's
-    duplicated postings change probe cost, not probe answers."""
-    from pyspark.sql import types as T
-
-    from data_engineer_challenge_spark.operators.dedup_index import MinHashIndex
-    from data_engineer_challenge_spark.streaming.ingest import (
-        ingest_documents_deduped,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    wave = docs.limit(15)
-    src = str(tmp_path / "src")
-    wave.write.parquet(src)
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), threshold=0.8)
-    idx.build(spark.createDataFrame([], schema))
-    ckpt = str(tmp_path / "ckpt")
-
-    ingest_documents_deduped(spark, src, schema, wh, "DOCS", idx, ckpt)
-    before = {
-        tuple(r) for r in wh.read("DOCS").select("doc_id", "text").collect()
-    }
-    assert len(before) == wave.count()
-
-    # crashed-commit replay: the same batch re-executes against the
-    # sink (this is what Spark does on restart if the checkpoint commit
-    # didn't land) — emulate by re-running the whole availableNow
-    # stream with a FRESH checkpoint over the same files
-    ingest_documents_deduped(
-        spark, src, schema, wh, "DOCS", idx, str(tmp_path / "ckpt2")
-    )
-    after = {
-        tuple(r) for r in wh.read("DOCS").select("doc_id", "text").collect()
-    }
-    assert after == before  # converged: no duplicates, no flapping
-
-    # and probe answers are unchanged despite duplicated postings
-    probe = idx.probe(wave.limit(3))
-    assert {r["new_id"] for r in probe.collect()} == {
-        r["doc_id"] for r in wave.limit(3).collect()
-    }
-
-
-def test_refresh_from_changes_incremental_and_crash_heal(spark, tmp_path):
-    """CDC-driven incremental corpus refresh: change-feed delta ->
-    MinHashIndex probe -> txn-idempotent append. Covers cursor
-    recovery from the manifest txn map, near-dup drops across ticks,
-    no-op ticks, and the crash window between clean-append and
-    index-append (the heal must re-index from clean's own change feed,
-    so the LATER near-dup of a survivor is still caught)."""
-    from pyspark.sql import types as T
-
-    from data_engineer_challenge_spark.operators.dedup_index import MinHashIndex
-    from data_engineer_challenge_spark.operators.snapshot import SnapshotTable
-    from data_engineer_challenge_spark.streaming.ingest import (
-        refresh_from_changes,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    wave1 = docs.limit(20)
-    t0 = wave1.limit(1).collect()[0]["text"]
-
-    raw = SnapshotTable(spark, str(tmp_path / "raw"))
-    clean = SnapshotTable(spark, str(tmp_path / "clean"))
-    idx = MinHashIndex(spark, str(tmp_path / "idx"), threshold=0.8)
-    idx.build(spark.createDataFrame([], schema))
-
-    # tick 1: everything is new
-    raw.append(wave1)
-    v1 = refresh_from_changes(spark, raw, clean, idx)
-    assert v1 is not None and clean.read().count() == 20
-    # idle tick: no new raw commits -> no-op, version unchanged
-    assert refresh_from_changes(spark, raw, clean, idx) is None
-    assert clean.current_version() == v1
-
-    # tick 2: near-dup of an ingested doc + one novel doc
-    raw.append(
-        spark.createDataFrame(
-            [
-                (900001, t0.rsplit(" ", 1)[0] + " zzz"),  # near-dup
-                (900002, "genuinely novel material " * 25),
-            ],
-            schema,
-        )
-    )
-    refresh_from_changes(spark, raw, clean, idx)
-    ids = {r["doc_id"] for r in clean.read().select("doc_id").collect()}
-    assert 900002 in ids and 900001 not in ids and len(ids) == 21
-
-    # crash window: novel doc committed to clean but the index append
-    # was lost — emulate by appending a survivor straight to clean
-    # (txn recorded, index never told), then feeding a near-dup of it
-    crash_doc = "survivor whose postings were lost to a crash " * 20
-    nv = raw.current_version() + 1
-    raw.append(spark.createDataFrame([(900100, crash_doc)], schema))
-    clean.append(
-        spark.createDataFrame([(900100, crash_doc)], schema),
-        txn=f"cdc-{nv}",
-    )
-    raw.append(
-        spark.createDataFrame(
-            [(900101, crash_doc.rsplit(" ", 2)[0] + " tail")], schema
-        )
-    )
-    refresh_from_changes(spark, raw, clean, idx)
-    ids = {r["doc_id"] for r in clean.read().select("doc_id").collect()}
-    # the heal indexed 900100 from clean's change feed BEFORE probing,
-    # so its near-dup was dropped — without the heal it would slip in
-    assert 900100 in ids and 900101 not in ids and len(ids) == 22
 
 
 def test_incremental_agg_matches_full_recompute(spark, tmp_path):

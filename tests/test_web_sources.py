@@ -466,101 +466,6 @@ def test_warc_tick_maintains_text_index(spark, tmp_path):
     assert stats2 == 2
 
 
-def test_crawl_to_training_mix_composition(spark, tmp_path):
-    """The full crawl-to-mix loop (r9): WARC ticks land documents in
-    the warehouse; the curation refresh enriches them (``prepare``
-    derives ``lang`` — crawled corpora carry no labels), runs the
-    funnel with a deterministic scorer, and versions the mix in a
-    SnapshotTable. Pins: the committed mix equals the funnel run
-    directly over the prepared corpus; a second crawl wave + refresh
-    commits a NEW version containing the new document while time
-    travel reproduces wave one's mix; replayed refresh txns commit
-    nothing."""
-    from pyspark.sql import functions as F
-
-    from data_engineer_challenge_spark.operators.merge import (
-        ParquetWarehouse,
-    )
-    from data_engineer_challenge_spark.operators.snapshot import (
-        SnapshotTable,
-    )
-    from data_engineer_challenge_spark.plans.text import curation_funnel
-    from data_engineer_challenge_spark.streaming.ingest import (
-        curation_refresh_tick,
-    )
-    from data_engineer_challenge_spark.streaming.snapshot_diff import (
-        SnapshotState,
-    )
-    from data_engineer_challenge_spark.streaming.warc_ingest import (
-        warc_ingest_tick,
-    )
-
-    warc_dir = tmp_path / "segments"
-    warc_dir.mkdir()
-    (warc_dir / "a.warc").write_bytes(_segment([
-        ("doc-a", "http://x/a", _html(_LONG_A)),
-        ("doc-b", "http://x/b", _html(_LONG_C)),
-    ]))
-    state = SnapshotState.load(str(tmp_path / "offsets.json"))
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    assert warc_ingest_tick(
-        spark, str(warc_dir), state, wh, "web_docs"
-    ).fired
-
-    def prep(d):
-        # crawl tables carry no lang label: derive one (marker-word
-        # stand-in, deterministic) — the funnel's DSIR target slice
-        return d.select(
-            "doc_id",
-            F.when(F.lower("text").contains("the"), "en")
-            .otherwise("xx")
-            .alias("lang"),
-            "text",
-        )
-
-    def scorer(d):
-        return d.withColumn(
-            "quality_score", (F.length("text") / 1000.0)
-        ).withColumn("is_kept", F.length("text") > 40)
-
-    sel = SnapshotTable(spark, str(tmp_path / "mix"))
-    r1 = curation_refresh_tick(
-        spark, wh, "web_docs", sel, txn="curate-1",
-        scorer=scorer, topk=10, prepare=prep,
-    )
-    assert r1["version"] is not None and r1["selected"] >= 1
-    want1 = sorted(map(tuple, curation_funnel(
-        prep(wh.read("web_docs")), scorer=scorer, topk=10
-    ).collect()))
-    assert sorted(map(tuple, sel.read().collect())) == want1
-
-    # wave two: a new crawl segment, a new refresh, a new version
-    (warc_dir / "b.warc").write_bytes(_segment([
-        ("doc-c", "http://y/c", _html(
-            "an entirely new final article about terraced rice "
-            "irrigation canals and bamboo aqueduct engineering "
-            "with enough words to clear the length gate easily"
-        )),
-    ]))
-    assert warc_ingest_tick(
-        spark, str(warc_dir), state, wh, "web_docs"
-    ).fired
-    assert curation_refresh_tick(  # replay of wave one: no commit
-        spark, wh, "web_docs", sel, txn="curate-1",
-        scorer=scorer, topk=10, prepare=prep,
-    )["version"] is None
-    r2 = curation_refresh_tick(
-        spark, wh, "web_docs", sel, txn="curate-2",
-        scorer=scorer, topk=10, prepare=prep,
-    )
-    assert r2["version"] == r1["version"] + 1
-    got2 = {t[0] for t in map(tuple, sel.read().collect())}
-    assert any("doc-c" in d for d in got2)  # the new doc made the mix
-    assert sorted(
-        map(tuple, sel.read(version=r1["version"]).collect())
-    ) == want1  # wave one's mix reproduces exactly
-
-
 def test_warc_tick_legacy_txn_key_state_loss_no_double_count(
     spark, tmp_path
 ):

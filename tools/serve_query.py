@@ -27,7 +27,7 @@ Each prints one JSON line: {"results": [[id, score, rank], ...],
 "wall_ms": ..., ...config...}. Answers are bit-identical to the
 cluster's `probe_adc` / `probe` for the same config (pinned in
 tests). `--n-probe` defaults to the store's persisted `n_probe` hint
-when one exists (written by maybe_rebucket / reselect_serving), else
+when one exists (written by maybe_rebucket), else
 2. The process imports pyspark's MODULE (a plain Python import) but
 never starts a session — serving latency is the pyarrow read (first
 touch) + resident-numpy scoring measured in SCALE.md's point-serving
@@ -219,9 +219,9 @@ def main() -> None:
         else (idx.n_probe_hint or 2)
     )
     # BOTH serving levers default to the store's persisted hints
-    # (r13 review): reselect_serving persists adc_shortlist precisely
-    # because a hand-picked width silently under-recalls a rebucketed
-    # coded store (SCALE.md: hints 0.914 vs shortlist=2048's 0.657)
+    # (r13 review): a staged maybe_rebucket persists adc_shortlist
+    # precisely because a hand-picked width silently under-recalls a
+    # rebucketed coded store (SCALE.md: hints 0.914 vs shortlist=2048's 0.657)
     if args.shortlist is not None and args.shortlist <= 0:
         ap.error("--shortlist must be positive")
     shortlist = (
